@@ -11,10 +11,10 @@ actually is — an append-only segmented log with consumer offsets —
 using the Spark 4 Python DataSource API (the tick source's machinery,
 sources/tick_source.py):
 
-- **publish** appends an immutable JSONL segment atomically (stage +
-  fsync + rename into the next ``seg-%012d`` slot, max+1 allocation —
-  the tombstone-delta protocol): concurrent producers land in distinct
-  segments, a torn write is invisible.
+- **publish** appends an immutable Arrow IPC file segment atomically
+  (stage + fsync + link into the next ``seg-%012d.arrow`` slot, max+1
+  allocation — the tombstone-delta protocol): concurrent producers
+  land in distinct segments, a torn write is invisible.
 - **stream read** is a partition-planning ``DataSourceStreamReader``
   (round-10 verdict task #1 — the previous
   ``SimpleDataSourceStreamReader`` form prefetched every consumed row
@@ -31,11 +31,12 @@ sources/tick_source.py):
   consumer group's acked offset broker-side (``_consumers/<group>``)
   — the retention signal ``purge_acked`` GCs fully-acked segments by,
   exactly how consumer-group offsets drive broker retention.
-- **DLQ**: poison messages (unparseable lines) are emitted as
-  ``key=NULL, value=<raw line>`` rows — errors-as-data — so the
-  engine's F3 malformed-guard / dead-letter split (functions/errors.py,
-  streaming/sinks.py) routes them without killing the stream, the
-  reference's R5 negative requirement.
+- **DLQ**: poison messages (raw broker lines that never framed as a
+  (key, value) record, published with :func:`publish_poison`) are
+  stored and read as ``key=NULL, value=<raw line>`` rows —
+  errors-as-data — so the engine's F3 malformed-guard / dead-letter
+  split (functions/errors.py, streaming/sinks.py) routes them without
+  killing the stream, the reference's R5 negative requirement.
 
 Round 10 distributed the producer (one segment per partition published
 FROM the executors, idempotent (batch, partition, digest) markers) and
@@ -54,7 +55,8 @@ added competing consumers. Round 11 completes the scale story:
 - **row-count sidecars** (``_counts/%012d``, written by every
   producer) make offset arithmetic O(#segments) tiny metadata reads on
   the driver; a missing/stale sidecar (crash window, external
-  truncation) falls back to a one-time newline count and is rewritten.
+  truncation) falls back to a one-time count of the segment's IPC
+  batch lengths and is rewritten.
 - **lease-based claim redelivery** (round-10 verdict task #4) — each
   competing consumer holds a lease (``_claims/<group>/_lease_<id>``)
   heartbeated at every planning tick; with ``lease_timeout_s`` set,
@@ -98,126 +100,52 @@ class FencedConsumerError(RuntimeError):
     broker analogue of an epoch/generation fencing error."""
 
 
-# --- segment codec (round-13 verdict task #3) --------------------------
-# The queue's WIRE FORMAT is a per-queue choice pinned at first publish:
-#   jsonl (default) — one JSON object per line; poison lines decode as
-#     key=NULL errors-as-data rows; seek via the _offsets byte index.
-#   arrow — Arrow IPC *file* segments (length-prefixed binary blocks +
-#     a footer of batch offsets): the decode-bound JSONL term vanishes
-#     (no JSON parse on the consume path) and the IPC footer IS the
-#     seek index — get_batch(i) random-accesses one block, so a span
-#     read never scans skip bytes. Uniform _ARROW_BATCH_ROWS blocks
-#     (recorded in the count sidecar as ":a<block>") let the reader
-#     jump straight to start_row's block.
-# Per-queue (a `_codec` marker file, atomic first-wins claim), NOT
-# per-segment: mixed-extension slots would break the single-namespace
-# atomicity of the max+1 slot race (two producers with different
-# extensions could both "win" slot N). The marker is immutable; a
-# conflicting explicit codec raises. Offsets, claims, ACK ledgers,
-# retention, and the (seg, pos, key, value) schema are codec-blind.
+# --- segment format ----------------------------------------------------
+# Every segment is an Arrow IPC *file* of (key string, value string)
+# record batches: length-prefixed binary blocks plus a footer of batch
+# offsets. The consume path never parses text, and the IPC footer IS
+# the seek index — get_batch(i) random-accesses one block, so a span
+# read never scans skip bytes. Uniform _ARROW_BATCH_ROWS blocks
+# (recorded in the count sidecar as ":a<block>") let the reader jump
+# straight to start_row's block. The broker never re-parses payloads:
+# key=NULL is the poison/DLQ discriminator (publish_poison writes every
+# row that way).
 
-_CODECS = ("jsonl", "arrow")
-_SEG_EXT = {"jsonl": ".jsonl", "arrow": ".arrow"}
+_SEG_EXT = ".arrow"
+#: the line-per-record format earlier versions wrote; such a queue is
+#: refused (see _seg_number) rather than read as empty
+_LEGACY_SEG_EXT = ".jsonl"
 _ARROW_BATCH_ROWS = 1 << 16
-_CODEC_CACHE: dict[str, str] = {}
-
-
-def _codec_path(queue_dir: str) -> str:
-    return os.path.join(queue_dir, "_codec")
-
-
-def _read_codec_marker(queue_dir: str) -> str | None:
-    try:
-        with open(_codec_path(queue_dir), encoding="utf-8") as f:
-            return f.read().strip()
-    except FileNotFoundError:
-        return None
-
-
-def queue_codec(queue_dir: str) -> str:
-    """The queue's pinned wire codec; unmarked queues are legacy JSONL.
-    Positive reads cache forever (the marker is immutable once linked);
-    absence is deliberately uncached — the marker appears at the first
-    publish and must be seen then."""
-    c = _CODEC_CACHE.get(queue_dir)
-    if c is not None:
-        return c
-    c = _read_codec_marker(queue_dir)
-    if c is None:
-        return "jsonl"
-    if c not in _CODECS:
-        raise ValueError(f"unknown fqueue codec marker {c!r} in {queue_dir}")
-    _CODEC_CACHE[queue_dir] = c
-    return c
-
-
-def set_queue_codec(queue_dir: str, codec: str) -> str:
-    """Pin (or verify) the queue's codec. First-wins and atomic under
-    the same stage + os.link protocol as segment publish, so two
-    producers racing different codecs resolve to exactly one marker and
-    the loser RAISES instead of writing unreadable segments."""
-    if codec not in _CODECS:
-        raise ValueError(f"unknown fqueue codec {codec!r}; choose from {_CODECS}")
-    cur = _read_codec_marker(queue_dir)
-    if cur is None:
-        os.makedirs(queue_dir, exist_ok=True)
-        stage = os.path.join(
-            queue_dir, f"_codec_stage_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-        )
-        with open(stage, "w", encoding="utf-8") as f:
-            f.write(codec)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(stage, _codec_path(queue_dir))
-        except FileExistsError:
-            pass  # lost the claim — adopt the winner's codec below
-        os.unlink(stage)
-        cur = _read_codec_marker(queue_dir)
-    if cur != codec:
-        raise ValueError(
-            f"queue {queue_dir} is pinned to codec {cur!r}; refusing to "
-            f"publish {codec!r} segments into it"
-        )
-    _CODEC_CACHE[queue_dir] = cur
-    return cur
-
-
-def _resolve_codec(queue_dir: str, codec: str | None) -> str:
-    """Producer-side codec resolution: an explicit ``codec`` pins the
-    queue (or verifies the existing pin); ``None`` follows the queue's
-    marker, falling back to ``$FQUEUE_DEFAULT_CODEC`` (test/bench knob)
-    then JSONL for brand-new queues. Always pins — after the first
-    publish every producer and reader agrees from the marker alone."""
-    if codec is None:
-        codec = _read_codec_marker(queue_dir) or os.environ.get(
-            "FQUEUE_DEFAULT_CODEC", "jsonl"
-        )
-    return set_queue_codec(queue_dir, codec)
 
 
 # --- broker-side API (producer / retention) ---------------------------
 
 
 def _seg_path(queue_dir: str, n: int) -> str:
-    ext = _SEG_EXT[queue_codec(queue_dir)]
-    return os.path.join(queue_dir, f"{_SEG_PREFIX}{n:0{_SEG_DIGITS}d}{ext}")
+    return os.path.join(queue_dir, f"{_SEG_PREFIX}{n:0{_SEG_DIGITS}d}{_SEG_EXT}")
 
 
 def _count_path(queue_dir: str, n: int) -> str:
     return os.path.join(queue_dir, "_counts", f"{n:0{_SEG_DIGITS}d}")
 
 
-def _seg_number(name: str) -> int | None:
-    """Segment number from a directory entry name, any codec ext."""
+def _seg_number(queue_dir: str, name: str) -> int | None:
+    """Segment number from a directory entry name. A legacy JSONL
+    segment raises: skipping it would silently drop its messages from
+    every plan, and this reader cannot decode it."""
     if not name.startswith(_SEG_PREFIX):
         return None
-    for ext in _SEG_EXT.values():
-        if name.endswith(ext):
-            body = name[len(_SEG_PREFIX) : -len(ext)]
-            if body.isdigit():
-                return int(body)
-    return None
+    stem, ext = os.path.splitext(name[len(_SEG_PREFIX) :])
+    if not stem.isdigit():
+        return None
+    if ext == _LEGACY_SEG_EXT:
+        raise ValueError(
+            f"{os.path.join(queue_dir, name)} is a JSONL fqueue segment; "
+            "this queue predates the Arrow IPC segment format and cannot "
+            "be read or appended to — drain it with the release that "
+            "wrote it, or republish its messages"
+        )
+    return int(stem) if ext == _SEG_EXT else None
 
 
 def _list_segments(queue_dir: str) -> list[int]:
@@ -225,30 +153,8 @@ def _list_segments(queue_dir: str) -> list[int]:
         names = os.listdir(queue_dir)
     except FileNotFoundError:
         return []
-    out = [n for n in map(_seg_number, names) if n is not None]
+    out = [n for n in (_seg_number(queue_dir, nm) for nm in names) if n is not None]
     return sorted(out)
-
-
-def _stage_lines(queue_dir: str, lines) -> tuple[str, int]:
-    """Durably write a staged segment file (fsync'd); return its path
-    and line count (the row-count sidecar datum)."""
-    os.makedirs(queue_dir, exist_ok=True)
-    stage = os.path.join(queue_dir, f"_stage_{os.getpid()}_{uuid.uuid4().hex[:8]}")
-    n = 0
-    with open(stage, "w", encoding="utf-8") as f:
-        for line in lines:
-            f.write(line + "\n")
-            # count PHYSICAL lines, not iterator items: publish_poison
-            # feeds raw broker lines whose EMBEDDED newlines become
-            # extra rows in the line-oriented file — an item count
-            # would make a byte-size-validated sidecar that undercounts,
-            # and the stream planner would permanently drop the excess
-            # rows (self-review finding, round 11). JSON-wrapped
-            # publishes escape newlines, so for them this is identical.
-            n += line.count("\n") + 1
-        f.flush()
-        os.fsync(f.fileno())
-    return stage, n
 
 
 def _atomic_write(path: str, text: str) -> None:
@@ -266,20 +172,11 @@ def _write_count(
 ) -> None:
     # "rows:bytes[:mark]" — the byte size validates the sidecar against
     # later truncation (retention zeroes a segment; its sidecar goes
-    # stale). The optional mark records producer-known provenance:
-    #   "j"        CANONICAL-JSONL: exactly one json.dumps object per
-    #              line (publish / queue_sink) — licenses the Arrow
-    #              fast-path JSON decode. A post-hoc row-count guard
-    #              alone cannot tell a canonical block from a poison
-    #              block where a skipped blank line and a
-    #              two-objects-on-one-line line cancel out (round-12
-    #              self-review: that pairing emitted wrong rows and
-    #              DROPPED the DLQ poison rows).
-    #   "a<rows>"  arrow codec: uniform IPC batches of <rows> rows
-    #              (last one partial) — licenses the reader's jump to
-    #              start_row's batch index without scanning prior
-    #              batch lengths.
-    # Recounts never write a mark (provenance flows from the producer).
+    # stale). The optional mark "a<rows>" records that the producer
+    # wrote uniform IPC batches of <rows> rows (last one partial) —
+    # licensing the reader's jump to start_row's batch index without
+    # scanning prior batch lengths. Recounts never write a mark
+    # (provenance flows from the producer).
     suffix = f":{mark}" if mark else ""
     _atomic_write(_count_path(queue_dir, seg), f"{n_rows}:{size}{suffix}")
 
@@ -299,7 +196,7 @@ _COUNT_CACHE_MAX = 65536
 
 def _segment_count_sized(queue_dir: str, seg: int, size: int) -> int:
     """Row count of a segment whose byte size the caller already knows
-    (one scandir stat) — sidecar read / newline recount, cached."""
+    (one scandir stat) — sidecar read / IPC batch recount, cached."""
     if size == 0:
         return 0
     key = (queue_dir, seg, size)
@@ -315,29 +212,13 @@ def _segment_count_sized(queue_dir: str, seg: int, size: int) -> int:
     except (FileNotFoundError, ValueError):
         pass
     if n is None:
-        if queue_codec(queue_dir) == "arrow":
-            try:
-                n = _arrow_segment_rows(_seg_path(queue_dir, seg))
-            except FileNotFoundError:
-                return 0  # purged between scandir and recount; uncached
-        else:
-            n = 0
-            last = b"\n"
-            try:
-                with open(_seg_path(queue_dir, seg), "rb") as f:
-                    for chunk in iter(lambda: f.read(1 << 20), b""):
-                        n += chunk.count(b"\n")
-                        last = chunk[-1:]
-            except FileNotFoundError:
-                # unlinked (retention purge) between the caller's scandir
-                # and this recount — the old stat-inside path tolerated
-                # that as "no rows"; planning must too (round-13 review).
-                # NOT cached: the key's size came from the vanished file.
-                return 0
-            if last != b"\n":
-                n += 1  # a final unterminated line still decodes as one row
-        # recount rewrite NEVER claims a provenance mark: that flows
-        # only from the producer (see _write_count)
+        try:
+            n = _arrow_segment_rows(_seg_path(queue_dir, seg))
+        except FileNotFoundError:
+            # unlinked (retention purge) between the caller's scandir
+            # and this recount — planning treats that as "no rows".
+            # NOT cached: the key's size came from the vanished file.
+            return 0
         _write_count(queue_dir, seg, n, size)
     while len(_COUNT_CACHE) >= _COUNT_CACHE_MAX:
         _COUNT_CACHE.pop(next(iter(_COUNT_CACHE)))
@@ -348,93 +229,15 @@ def _segment_count_sized(queue_dir: str, seg: int, size: int) -> int:
 def _segment_count(queue_dir: str, seg: int) -> int | None:
     """Row count of a segment from metadata: the producer-written
     sidecar when it matches the current byte size, else a one-time
-    newline count (rewriting the sidecar). None when the segment no
-    longer exists. This is the broker end-offset query — the planning
-    path never reads row DATA on the driver."""
+    recount (rewriting the sidecar). None when the segment no longer
+    exists. This is the broker end-offset query — the planning path
+    never reads row DATA on the driver."""
     p = _seg_path(queue_dir, seg)
     try:
         size = os.path.getsize(p)
     except FileNotFoundError:
         return None
     return _segment_count_sized(queue_dir, seg, size)
-
-
-# --- span seek index ---------------------------------------------------
-# Byte offset of every _OFFSET_EVERY-th row, so a span read SEEKS to
-# its start instead of line-scanning from byte 0. Without it, a
-# segment split into S spans re-reads O(S²/2) span-lengths of bytes
-# per micro-batch — irrelevant at test scale, THE read-amplification
-# term at broker scale (a 512 MB segment in 2 MB spans would scan
-# ~64 GB of skip bytes per batch). Built lazily by the first reader
-# that needs it (one pass, persisted, size-validated — exactly the
-# _counts recount protocol) because the producer's staged write is
-# text-mode and should not pay tell() per line.
-_OFFSET_EVERY = 65536
-_OFFSETS_CACHE: dict[tuple[str, int, int], list[int]] = {}
-_OFFSETS_CACHE_MAX = 1024
-
-
-def _offsets_path(queue_dir: str, seg: int) -> str:
-    return os.path.join(queue_dir, "_offsets", f"{seg:0{_SEG_DIGITS}d}")
-
-
-def _segment_offsets(queue_dir: str, seg: int, size: int, fobj=None) -> list[int]:
-    """offsets[k] = byte position of row k*_OFFSET_EVERY. Valid only
-    for the exact byte size it was built at (immutable-once-visible
-    segments make that a permanent fact; truncation/rewrite changes
-    the size and invalidates).
-
-    When the caller passes its open binary file ``fobj``, the build
-    scans THAT descriptor (position restored) so the offsets are
-    guaranteed to describe exactly the bytes the caller will read —
-    a second open-by-path could see a segment truncated between the
-    caller's fstat and the scan, and caching THOSE offsets under the
-    caller's size key would misalign every later seek (round-13
-    self-review). Persist/cache only when the scanned byte count
-    matches ``size``."""
-    key = (queue_dir, seg, size)
-    hit = _OFFSETS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    offs: list[int] | None = None
-    try:
-        with open(_offsets_path(queue_dir, seg), encoding="utf-8") as f:
-            sz_s, every_s, body = f.read().split(":", 2)
-        if int(sz_s) == size and int(every_s) == _OFFSET_EVERY:
-            offs = [int(x) for x in body.split(",")] if body else [0]
-    except (FileNotFoundError, ValueError):
-        pass
-    scanned = size
-    if offs is None:
-        offs = [0]
-        pos = 0
-        row = 0
-        src = fobj if fobj is not None else open(_seg_path(queue_dir, seg), "rb")
-        saved = src.tell() if fobj is not None else None
-        try:
-            if fobj is not None:
-                src.seek(0)
-            for line in src:
-                pos += len(line)
-                row += 1
-                if row % _OFFSET_EVERY == 0:
-                    offs.append(pos)
-        finally:
-            if fobj is not None:
-                src.seek(saved)
-            else:
-                src.close()
-        scanned = pos
-        if scanned == size:
-            _atomic_write(
-                _offsets_path(queue_dir, seg),
-                f"{size}:{_OFFSET_EVERY}:{','.join(map(str, offs))}",
-            )
-    if scanned == size:
-        while len(_OFFSETS_CACHE) >= _OFFSETS_CACHE_MAX:
-            _OFFSETS_CACHE.pop(next(iter(_OFFSETS_CACHE)))
-        _OFFSETS_CACHE[key] = offs
-    return offs
 
 
 def _scan_segments(queue_dir: str) -> list[tuple[int, int]]:
@@ -447,7 +250,7 @@ def _scan_segments(queue_dir: str) -> list[tuple[int, int]]:
     try:
         with os.scandir(queue_dir) as it:
             for e in it:
-                n = _seg_number(e.name)
+                n = _seg_number(queue_dir, e.name)
                 if n is not None:
                     try:
                         out.append((n, e.stat().st_size))
@@ -457,21 +260,6 @@ def _scan_segments(queue_dir: str) -> list[tuple[int, int]]:
         return []
     out.sort()
     return out
-
-
-def _segment_is_canonical(queue_dir: str, seg: int) -> bool:
-    """True iff the producer marked this segment canonical JSONL (one
-    json.dumps object per line) AND the sidecar still matches the
-    current byte size. Anything else — poison segments, pre-round-12
-    sidecars, retention-truncated files — reads via the per-line
-    text-mode decoder."""
-    try:
-        size = os.path.getsize(_seg_path(queue_dir, seg))
-        with open(_count_path(queue_dir, seg), encoding="utf-8") as f:
-            parts = f.read().split(":")
-        return len(parts) >= 3 and parts[2] == "j" and int(parts[1]) == size
-    except (FileNotFoundError, ValueError, OSError):
-        return False
 
 
 #: canonical record schema order; ``columns`` option values must be a
@@ -501,10 +289,9 @@ def _parse_columns(options) -> tuple[str, ...] | None:
 
 def _segment_arrow_block(queue_dir: str, seg: int, size: int) -> int | None:
     """The uniform IPC batch row count the PRODUCER recorded for this
-    arrow segment (count-sidecar mark ``a<rows>``), or None when the
-    sidecar is missing/stale/unmarked — the reader then accumulates
-    batch lengths from index 0 instead of jumping (correct, just no
-    skip)."""
+    segment (count-sidecar mark ``a<rows>``), or None when the sidecar
+    is missing/stale/unmarked — the reader then accumulates batch
+    lengths from index 0 instead of jumping (correct, just no skip)."""
     try:
         with open(_count_path(queue_dir, seg), encoding="utf-8") as f:
             parts = f.read().split(":")
@@ -516,12 +303,10 @@ def _segment_arrow_block(queue_dir: str, seg: int, size: int) -> int | None:
 
 
 def _arrow_segment_rows(path: str) -> int:
-    """Total row count of an Arrow IPC file segment (recount fallback —
-    the producer sidecar is the normal source). Memory-mapped, so the
-    batches are touched lazily page-by-page, not slurped. A
-    retention-truncated (0-byte) or externally mangled file counts as
-    zero rows — the same degrade-to-empty posture as the JSONL
-    recount's missing-file arm."""
+    """Total row count of a segment (recount fallback — the producer
+    sidecar is the normal source). Memory-mapped, so the batches are
+    touched lazily page-by-page, not slurped. A retention-truncated
+    (0-byte) or externally mangled file counts as zero rows."""
     import pyarrow as pa
 
     if os.path.getsize(path) == 0:
@@ -535,21 +320,21 @@ def _arrow_segment_rows(path: str) -> int:
         return 0
 
 
-def _read_arrow_segment_batches(
+def _read_segment_batches(
     queue_dir: str,
     seg: int,
     start_row: int = 0,
     end_row: int | None = None,
     columns: tuple[str, ...] | None = None,
 ):
-    """Span read over an Arrow IPC file segment → (seg, pos, key, value)
-    record batches. The IPC footer is the seek index: ``get_batch(i)``
-    random-accesses exactly one block, so a span read touches only its
-    own batches — the generalization of the JSONL ``_offsets`` byte
-    index the round-13 verdict asked for, for free in the format. With
-    the producer's uniform-block sidecar mark the reader jumps straight
-    to ``start_row``'s batch index; otherwise it walks batch lengths
-    from 0 (metadata-cheap under the memory map)."""
+    """The span read as an iterator of (seg, pos, key, value) Arrow
+    record batches — what the DSv2 ``read()`` paths yield (PySpark
+    streams RecordBatches through to the JVM untouched, skipping the
+    per-row tuple→Arrow conversion). The IPC footer is the seek index:
+    ``get_batch(i)`` random-accesses exactly one block, so a span read
+    touches only its own batches. With the producer's uniform-block
+    sidecar mark the reader jumps straight to ``start_row``'s batch
+    index; otherwise it walks batch lengths from 0."""
     import pyarrow as pa
 
     path = _seg_path(queue_dir, seg)
@@ -602,41 +387,49 @@ def _read_arrow_segment_batches(
             pos += bn
 
 
-def _commit_segment(
-    queue_dir: str, stage: str, n_lines: int | None = None, mark: str = ""
-) -> int:
+def _read_segment_rows(
+    queue_dir: str, seg: int, start_row: int = 0, end_row: int | None = None
+) -> Iterator[tuple]:
+    """Row view of a span — (seg, pos, key, value) tuples flattened from
+    :func:`_read_segment_batches` (tests and tools use this as the
+    generic reader)."""
+    for b in _read_segment_batches(queue_dir, seg, start_row, end_row):
+        yield from zip(*(c.to_pylist() for c in b.columns))
+
+
+def _commit_segment(queue_dir: str, stage: str, n_rows: int) -> int:
     """Link the staged file into the next free ``seg-%012d`` slot
     (max+1, gap-safe — the tombstone-delta protocol). os.link, NOT
     os.rename: rename silently OVERWRITES an existing FILE target on
     POSIX (the tombstone precedent is safe only because its slots are
     directories), so two producers racing to the same slot would
     clobber one segment; link is atomic and raises FileExistsError for
-    the loser, who re-scans and takes the next slot. With ``n_lines``
-    the row-count sidecar is written after the link (a crash between
-    the two leaves a recountable segment, never a wrong count)."""
-    while True:
-        segs = _list_segments(queue_dir)
-        n = segs[-1] + 1 if segs else 0
-        target = _seg_path(queue_dir, n)
-        try:
-            os.link(stage, target)
-            break
-        except FileExistsError:
-            continue  # lost the slot race to a concurrent producer
-    size = os.path.getsize(stage)
-    os.unlink(stage)
-    if n_lines is not None:
-        _write_count(queue_dir, n, n_lines, size, mark=mark)
+    the loser, who re-scans and takes the next slot. The row-count
+    sidecar is written after the link (a crash between the two leaves
+    a recountable segment, never a wrong count). The stage file is
+    removed on every path, including a refused legacy queue."""
+    try:
+        while True:
+            segs = _list_segments(queue_dir)
+            n = segs[-1] + 1 if segs else 0
+            try:
+                os.link(stage, _seg_path(queue_dir, n))
+                break
+            except FileExistsError:
+                continue  # lost the slot race to a concurrent producer
+        size = os.path.getsize(stage)
+    finally:
+        os.unlink(stage)
+    _write_count(queue_dir, n, n_rows, size, mark=f"a{_ARROW_BATCH_ROWS}")
     return n
 
 
-def _stage_arrow(queue_dir: str, pairs) -> tuple[str, int]:
-    """Durably write a staged Arrow IPC file segment of (key, value)
-    pairs in uniform ``_ARROW_BATCH_ROWS`` batches (fsync'd); return
-    (path, row count). Values normalize exactly as the JSONL decode
-    would render them — key: None stays NULL (the poison/null-key
-    discriminator), anything else stringifies; value: str(value), so
-    value=None round-trips as the string "None" on both codecs."""
+def _stage_records(queue_dir: str, pairs) -> tuple[str, int]:
+    """Durably write a staged segment of (key, value) pairs in uniform
+    ``_ARROW_BATCH_ROWS`` batches (fsync'd); return (path, row count).
+    key: None stays NULL (the poison/null-key discriminator), anything
+    else stringifies; value: str(value), so value=None is stored as the
+    string "None"."""
     import pyarrow as pa
 
     os.makedirs(queue_dir, exist_ok=True)
@@ -651,46 +444,21 @@ def _stage_arrow(queue_dir: str, pairs) -> tuple[str, int]:
                 ks.append(None if k is None else str(k))
                 vs.append(str(v))
                 if len(ks) >= _ARROW_BATCH_ROWS:
-                    w.write_batch(
-                        pa.record_batch(
-                            [pa.array(ks, pa.string()), pa.array(vs, pa.string())],
-                            schema=schema,
-                        )
-                    )
+                    w.write_batch(pa.record_batch([ks, vs], schema=schema))
                     n += len(ks)
                     ks, vs = [], []
             if ks:
-                w.write_batch(
-                    pa.record_batch(
-                        [pa.array(ks, pa.string()), pa.array(vs, pa.string())],
-                        schema=schema,
-                    )
-                )
+                w.write_batch(pa.record_batch([ks, vs], schema=schema))
                 n += len(ks)
         f.flush()
         os.fsync(f.fileno())
     return stage, n
 
 
-def _stage_records(queue_dir: str, pairs, codec: str) -> tuple[str, int, str]:
-    """Stage (key, value) pairs under the queue's codec → (stage path,
-    row count, count-sidecar provenance mark)."""
-    if codec == "arrow":
-        stage, n = _stage_arrow(queue_dir, pairs)
-        return stage, n, f"a{_ARROW_BATCH_ROWS}"
-    lines = (json.dumps({"key": k, "value": v}) for k, v in pairs)
-    stage, n = _stage_lines(queue_dir, lines)
-    # json.dumps guarantees one single-line object per record — the
-    # canonical-JSONL provenance the Arrow fast-path decode requires
-    return stage, n, "j"
-
-
-def publish(queue_dir: str, records, codec: str | None = None) -> int:
+def publish(queue_dir: str, records) -> int:
     """Append one immutable segment of ``records`` (iterable of
     (key, value) pairs or {"key","value"} dicts; values stringified).
     Atomic: a reader either sees the whole segment or none of it.
-    ``codec`` pins a NEW queue's wire format ("jsonl" default /
-    "arrow"); on an existing queue it must match the pinned marker.
     Returns the segment number."""
 
     def pairs():
@@ -700,28 +468,18 @@ def publish(queue_dir: str, records, codec: str | None = None) -> int:
             else:
                 yield rec
 
-    resolved = _resolve_codec(queue_dir, codec)
-    stage, n, mark = _stage_records(queue_dir, pairs(), resolved)
-    return _commit_segment(queue_dir, stage, n, mark=mark)
+    stage, n = _stage_records(queue_dir, pairs())
+    return _commit_segment(queue_dir, stage, n)
 
 
-def publish_poison(queue_dir: str, raw_lines: list[str], codec: str | None = None) -> int:
-    """Append a segment of RAW lines (not JSON-wrapped) — the test
-    hook for the DLQ contract: these decode as key=NULL poison rows.
-    On an arrow queue the same contract is expressed natively: each
-    physical line becomes a (key=NULL, value=raw) row — note a raw
-    line that happens to be a valid {"key","value"} object therefore
-    stays poison under arrow (the broker never re-parses payloads)
-    while jsonl would decode it; tests feeding invalid lines see
-    identical rows on both codecs."""
-    resolved = _resolve_codec(queue_dir, codec)
-    if resolved == "arrow":
-        physical = [
-            part for ln in raw_lines for part in ln.rstrip("\n").split("\n")
-        ]
-        stage, n = _stage_arrow(queue_dir, ((None, ln) for ln in physical))
-        return _commit_segment(queue_dir, stage, n, mark=f"a{_ARROW_BATCH_ROWS}")
-    stage, n = _stage_lines(queue_dir, (ln.rstrip("\n") for ln in raw_lines))
+def publish_poison(queue_dir: str, raw_lines: list[str]) -> int:
+    """Append a segment of RAW broker lines — the test hook for the DLQ
+    contract. Each PHYSICAL line (an embedded newline splits one item
+    into two) becomes a (key=NULL, value=raw) row. The broker never
+    re-parses payloads, so a raw line that happens to be a valid
+    {"key","value"} object stays poison too."""
+    physical = [part for ln in raw_lines for part in ln.rstrip("\n").split("\n")]
+    stage, n = _stage_records(queue_dir, ((None, ln) for ln in physical))
     return _commit_segment(queue_dir, stage, n)
 
 
@@ -815,14 +573,6 @@ def _purge_segment(queue_dir: str, seg: int) -> bool:
         f.truncate(0)
         f.flush()
         os.fsync(f.fileno())
-    # drop the seek-index sidecar with the data it described (round-13
-    # ADVICE: retention otherwise accumulates stale _offsets files
-    # forever — the size check already invalidates them, so this is
-    # purely a disk-usage fix; absent is fine)
-    try:
-        os.remove(_offsets_path(queue_dir, seg))
-    except FileNotFoundError:
-        pass
     return True
 
 
@@ -860,205 +610,6 @@ def purge_acked(queue_dir: str, up_to_group: str | None = None) -> list[int]:
         if n < min_seg and _purge_segment(queue_dir, n):
             purged.append(n)
     return purged
-
-
-# --- decode ------------------------------------------------------------
-
-
-def _decode_line(line: str) -> tuple[str | None, str]:
-    """A well-formed message decodes to (key, value); a poison line
-    decodes to (None, raw) — the errors-as-data DLQ row."""
-    try:
-        obj = json.loads(line)
-        if isinstance(obj, dict) and "value" in obj:
-            k = obj.get("key")
-            return (None if k is None else str(k)), str(obj["value"])
-    except json.JSONDecodeError:
-        pass
-    return None, line
-
-
-def _read_segment_rows(
-    queue_dir: str, seg: int, start_row: int = 0, end_row: int | None = None
-) -> Iterator[tuple]:
-    if queue_codec(queue_dir) == "arrow":
-        # codec-blind row view (tests/tools use this as the generic
-        # reader): flatten the arrow span batches back to tuples
-        for b in _read_arrow_segment_batches(queue_dir, seg, start_row, end_row):
-            yield from zip(*(c.to_pylist() for c in b.columns))
-        return
-    # stream line-by-line: a segment is never slurped whole, so a large
-    # segment costs the reader only the span it consumes
-    with open(_seg_path(queue_dir, seg), encoding="utf-8") as f:
-        for pos, line in enumerate(f):
-            if pos < start_row:
-                continue
-            if end_row is not None and pos >= end_row:
-                break
-            key, value = _decode_line(line.rstrip("\n"))
-            yield (seg, pos, key, value)
-
-
-#: lines per Arrow decode block — bounds reader memory to a few MB of
-#: raw line bytes per in-flight block while amortizing the pyarrow
-#: parse + batch build over enough rows to matter
-_DECODE_BLOCK_LINES = 1 << 16
-
-
-def _decode_block_arrow(block: list[bytes], seg: int, start_pos: int):
-    """Decode one block of RAW segment lines into a single Arrow record
-    batch ``(seg, pos, key, value)`` — the consume counterpart of the
-    producer's mapInArrow crossing (round-12 verdict task #2: per-row
-    ``json.loads`` + per-row tuple conversion in the DSv2 reader capped
-    consume at ~420k rows/s/node vs 928k publish).
-
-    Fast path: ONE ``pyarrow.json`` parse over the joined block with an
-    explicit ``(key string, value string)`` schema. That parse is
-    exact-equivalent to :func:`_decode_line` only when every line is a
-    JSON object whose ``key``/``value`` are strings or null AND whose
-    ``value`` is a present, non-null string — anything else either
-    raises (poison line, non-string payload: type conflicts with the
-    explicit schema) or surfaces as a null/short column (missing or
-    null ``value``, blank line skipped by the JSON reader), and the
-    whole block falls back to the per-line decoder, which preserves the
-    documented poison semantics byte-for-byte. Publish always writes
-    ``json.dumps({"key": ..., "value": ...})``, so real queues ride the
-    fast path; a poison segment pays only its own blocks' fallback."""
-    import pyarrow as pa
-
-    n = len(block)
-    keys = vals = None
-    try:
-        from io import BytesIO
-
-        from pyarrow import json as pa_json
-
-        tbl = pa_json.read_json(
-            BytesIO(b"".join(block)),
-            parse_options=pa_json.ParseOptions(
-                explicit_schema=pa.schema(
-                    [("key", pa.string()), ("value", pa.string())]
-                ),
-                unexpected_field_behavior="ignore",
-            ),
-        )
-        # exactness guards (see docstring): every physical line became a
-        # row, and no value is null (a null here is either "value": null
-        # — slow path yields the string "None" — or a missing field —
-        # slow path yields the poison row)
-        if tbl.num_rows == n and tbl.column("value").null_count == 0:
-            tbl = tbl.combine_chunks()
-            keys = tbl.column("key").chunk(0)
-            vals = tbl.column("value").chunk(0)
-    except pa.lib.ArrowException:
-        pass
-    if keys is None:
-        decoded = [
-            _decode_line(ln.rstrip(b"\r\n").decode("utf-8")) for ln in block
-        ]
-        keys = pa.array([k for k, _ in decoded], type=pa.string())
-        vals = pa.array([v for _, v in decoded], type=pa.string())
-    # pyarrow-native seg/pos columns: the DSv2 worker already imports
-    # pyarrow for the Arrow bridge, and skipping numpy here keeps the
-    # per-worker cold start (which dominates small tasks) lean
-    return pa.record_batch(
-        [
-            pa.repeat(pa.scalar(seg, pa.int64()), n),
-            pa.array(range(start_pos, start_pos + n), type=pa.int64()),
-            keys,
-            vals,
-        ],
-        names=["seg", "pos", "key", "value"],
-    )
-
-
-def _rows_to_batch(rows: list[tuple]):
-    """(seg, pos, key, value) tuples → one Arrow record batch."""
-    import pyarrow as pa
-
-    return pa.record_batch(
-        [
-            pa.array([r[0] for r in rows], type=pa.int64()),
-            pa.array([r[1] for r in rows], type=pa.int64()),
-            pa.array([r[2] for r in rows], type=pa.string()),
-            pa.array([r[3] for r in rows], type=pa.string()),
-        ],
-        names=["seg", "pos", "key", "value"],
-    )
-
-
-def _read_segment_batches(
-    queue_dir: str,
-    seg: int,
-    start_row: int = 0,
-    end_row: int | None = None,
-    columns: tuple[str, ...] | None = None,
-):
-    """The span read as an iterator of Arrow record batches — what the
-    DSv2 ``read()`` paths yield (PySpark streams RecordBatches through
-    to the JVM untouched, skipping the per-row tuple→Arrow conversion).
-    Blocks of ``_DECODE_BLOCK_LINES`` bound memory, so a large segment
-    still costs only the span consumed.
-
-    The binary fast-path loop runs ONLY for producer-marked canonical
-    segments (``_segment_is_canonical``): one json.dumps object per
-    physical line, by construction. A segment of unknown provenance
-    (publish_poison, pre-marker sidecars, truncation) decodes through
-    the TEXT-MODE per-line reader — the same universal-newline
-    semantics ``_read_segment_rows`` has always had, so the two
-    decoders can never disagree on poison shapes the guards can't see
-    (round-12 self-review: a skipped blank line + a two-object line
-    cancel out in the row-count guard; a bare ``\\r`` splits in text
-    mode but not in binary mode)."""
-    if queue_codec(queue_dir) == "arrow":
-        yield from _read_arrow_segment_batches(
-            queue_dir, seg, start_row, end_row, columns=columns
-        )
-        return
-
-    def _prune(batch):
-        # jsonl paths: decode dominates, so full-build + zero-copy
-        # select is fine — the win is the skipped JVM crossing
-        return batch.select(list(columns)) if columns else batch
-
-    if not _segment_is_canonical(queue_dir, seg):
-        rows: list[tuple] = []
-        for row in _read_segment_rows(queue_dir, seg, start_row, end_row):
-            rows.append(row)
-            if len(rows) >= _DECODE_BLOCK_LINES:
-                yield _prune(_rows_to_batch(rows))
-                rows = []
-        if rows:
-            yield _prune(_rows_to_batch(rows))
-        return
-    with open(_seg_path(queue_dir, seg), "rb") as f:
-        row = 0
-        if start_row >= _OFFSET_EVERY:
-            # seek to the last byte checkpoint at-or-before start_row
-            # instead of line-scanning from byte 0 (the O(spans²)
-            # read-amplification fix — see _segment_offsets)
-            offs = _segment_offsets(queue_dir, seg, os.fstat(f.fileno()).st_size, fobj=f)
-            chk = min(start_row // _OFFSET_EVERY, len(offs) - 1)
-            f.seek(offs[chk])
-            row = chk * _OFFSET_EVERY
-        block: list[bytes] = []
-        block_start = 0
-        for line in f:
-            pos = row
-            row += 1
-            if pos < start_row:
-                continue
-            if end_row is not None and pos >= end_row:
-                break
-            if not block:
-                block_start = pos
-            block.append(line)
-            if len(block) >= _DECODE_BLOCK_LINES:
-                yield _prune(_decode_block_arrow(block, seg, block_start))
-                block = []
-        if block:
-            yield _prune(_decode_block_arrow(block, seg, block_start))
-
 
 # --- Spark DataSource --------------------------------------------------
 
@@ -1849,7 +1400,6 @@ def _publish_partition(
     batch_id: int,
     pid: int,
     rows,
-    codec: str = "jsonl",
 ) -> None:
     """Executor-side publish of one partition's rows as one segment,
     under the same stage + fsync + os.link slot protocol as
@@ -1873,9 +1423,9 @@ def _publish_partition(
     from itertools import chain
 
     pairs = ((r[0], r[1]) for r in chain([first], rows))
-    stage, n, mark = _stage_records(queue_dir, pairs, codec)
+    stage, n = _stage_records(queue_dir, pairs)
     if producer_id is None:
-        _commit_segment(queue_dir, stage, n, mark=mark)
+        _commit_segment(queue_dir, stage, n)
         return
     h = hashlib.sha256()
     with open(stage, "rb") as f:
@@ -1885,7 +1435,7 @@ def _publish_partition(
     if os.path.exists(_marker_path(queue_dir, producer_id, batch_id, pid, digest)):
         os.unlink(stage)  # this exact content already committed
         return
-    seg = _commit_segment(queue_dir, stage, n, mark=mark)
+    seg = _commit_segment(queue_dir, stage, n)
     _write_marker(queue_dir, producer_id, batch_id, pid, digest, seg)
 
 
@@ -1894,7 +1444,6 @@ def queue_sink(
     key_col: str = "key",
     value_col: str = "value",
     producer_id: str | None = None,
-    codec: str | None = None,
 ):
     """foreachBatch writer publishing each micro-batch from the
     EXECUTORS — one segment per non-empty partition (round-9 verdict
@@ -1922,10 +1471,6 @@ def queue_sink(
 
     def write(batch_df, batch_id: int) -> None:
         sel = batch_df.select(key_col, value_col)
-        # resolve the wire codec ON THE DRIVER, once per batch, and pin
-        # the marker before executors stage — every partition then
-        # writes the same format and the slot race stays single-namespace
-        resolved = _resolve_codec(queue_dir, codec)
 
         def pub(batches):
             from pyspark import TaskContext
@@ -1938,9 +1483,7 @@ def queue_sink(
                     vals = b.column(1).to_pylist()
                     yield from zip(keys, vals)
 
-            _publish_partition(
-                queue_dir, producer_id, batch_id, pid, rows(), codec=resolved
-            )
+            _publish_partition(queue_dir, producer_id, batch_id, pid, rows())
             return
             yield  # pragma: no cover — makes pub a generator
 

@@ -1102,11 +1102,11 @@ def test_fqueue_release_claims_survives_concurrent_release(monkeypatch):
 
 
 def test_fqueue_poison_embedded_newline_counts_physical_lines():
-    """publish_poison feeds RAW broker lines; an embedded newline is two
-    physical rows in the line-oriented segment. The row-count sidecar
-    must count what the file holds, or the byte-size-validated sidecar
-    undercounts and the stream planner permanently drops the extra row
-    (self-review finding, round 11)."""
+    """publish_poison feeds RAW broker lines; an embedded newline makes
+    two physical lines, each its own key=NULL row. The row-count
+    sidecar must count the rows the segment holds, or the
+    byte-size-validated sidecar undercounts and the stream planner
+    permanently drops the extra row (self-review finding, round 11)."""
     import tempfile
 
     qdir = tempfile.mkdtemp(prefix="fq_nl_")

@@ -83,86 +83,6 @@ def test_asof_join_rejects_asof_row_reserved_name(spark):
         )
 
 
-# --- round-12 task #2: Arrow-batched fqueue consume decode --------------
-
-
-def _batches_to_tuples(batches):
-    out = []
-    for b in batches:
-        out.extend(
-            zip(
-                b.column("seg").to_pylist(),
-                b.column("pos").to_pylist(),
-                b.column("key").to_pylist(),
-                b.column("value").to_pylist(),
-            )
-        )
-    return out
-
-
-def test_arrow_consume_decode_matches_per_line_decoder(tmp_path):
-    """_read_segment_batches must be row-for-row identical to the
-    per-line tuple decoder on every fallback trigger: poison lines,
-    null/absent keys, non-string payloads, "value": null, missing
-    value, blank lines, unicode, and a clean fast-path segment."""
-    from labs_stream_processing_examples_scala_spark.sources import (
-        queue_source as Q,
-    )
-
-    qdir = str(tmp_path / "q")
-    import os
-
-    os.makedirs(qdir)
-    # clean fast-path segment
-    Q.publish(qdir, [(f"k{i}", f"v{i}-é中") for i in range(100)], codec="jsonl")
-    # a segment of every nasty shape (raw lines, bypassing publish)
-    Q.publish_poison(
-        qdir,
-        [
-            "not json at all",
-            '{"key": "a", "value": "ok"}',
-            '{"key": null, "value": "nullkey"}',
-            '{"key": 7, "value": "intkey"}',
-            '{"key": "b", "value": 42}',
-            '{"key": "c", "value": null}',
-            '{"key": "d"}',
-            "",
-            '["array", "line"]',
-            '{"key": "e", "value": "ok2", "extra": 1}',
-            '{"key": "f", "value": {"nested": true}}',
-        ],
-    )
-    for seg in Q._list_segments(qdir):
-        want = list(Q._read_segment_rows(qdir, seg))
-        got = _batches_to_tuples(Q._read_segment_batches(qdir, seg))
-        assert got == want, (seg, got[:5], want[:5])
-    # span slicing agrees too (mid-segment resume shape)
-    want = list(Q._read_segment_rows(qdir, 0, 17, 61))
-    got = _batches_to_tuples(Q._read_segment_batches(qdir, 0, 17, 61))
-    assert got == want
-    # batch schema is the declared source schema
-    b = next(iter(Q._read_segment_batches(qdir, 0)))
-    assert b.schema.names == ["seg", "pos", "key", "value"]
-
-
-def test_arrow_consume_block_boundaries(tmp_path, monkeypatch):
-    """Blocks smaller than the segment: positions stay globally
-    correct across block splits and span starts."""
-    from labs_stream_processing_examples_scala_spark.sources import (
-        queue_source as Q,
-    )
-
-    qdir = str(tmp_path / "q")
-    import os
-
-    os.makedirs(qdir)
-    Q.publish(qdir, [(str(i), str(i * i)) for i in range(50)], codec="jsonl")
-    monkeypatch.setattr(Q, "_DECODE_BLOCK_LINES", 7)
-    want = list(Q._read_segment_rows(qdir, 0, 3, 44))
-    got = _batches_to_tuples(Q._read_segment_batches(qdir, 0, 3, 44))
-    assert got == want and len(got) == 41
-
-
 # --- round-12 task #4: materialized IVF index + steady-state probe -------
 
 
@@ -235,67 +155,6 @@ def test_self_heal_flags_mt_dirty_sim_query(monkeypatch):
         lambda n: ran.append(n), list(timings), dict(timings), probes, {},
         mt_probes={"x_sim_nsw_topk": 165.0}, mt_floor_hint=160.0,
     ) == {}
-
-
-def test_arrow_consume_poison_cancellation_and_bare_cr(tmp_path):
-    """Round-12 self-review: (a) a skipped blank line + a
-    two-objects-on-one-line line cancel in the row-count guard and the
-    old fast path emitted wrong rows, dropping the DLQ poison rows;
-    (b) a bare carriage return splits lines in text mode but not in
-    binary mode. Both shapes must now decode byte-identically to
-    _read_segment_rows (non-canonical segments take the text-mode
-    per-line path)."""
-    from labs_stream_processing_examples_scala_spark.sources import (
-        queue_source as Q,
-    )
-
-    qdir = str(tmp_path / "q")
-    import os
-
-    os.makedirs(qdir)
-    Q.publish_poison(
-        qdir,
-        [
-            '{"key":"a","value":"x"}{"key":"b","value":"y"}',
-            "",
-            "bare\rreturn",
-            '{"key":"c",',
-            '"value":"z"}',
-        ],
-    )
-    for seg in Q._list_segments(qdir):
-        assert not Q._segment_is_canonical(qdir, seg)
-        want = list(Q._read_segment_rows(qdir, seg))
-        got = _batches_to_tuples(Q._read_segment_batches(qdir, seg))
-        assert got == want, (got, want)
-    # poison rows present (key NULL), none dropped
-    assert all(k is None for _, _, k, _ in want) and len(want) >= 5
-
-
-def test_canonical_marker_flows_from_producers(tmp_path):
-    """publish and queue_sink partitions mark segments canonical (fast
-    path); publish_poison and recount-rewritten sidecars do not."""
-    from labs_stream_processing_examples_scala_spark.sources import (
-        queue_source as Q,
-    )
-
-    qdir = str(tmp_path / "q")
-    import os
-
-    os.makedirs(qdir)
-    s0 = Q.publish(qdir, [("k", "v")], codec="jsonl")
-    s1 = Q.publish_poison(qdir, ["raw"])
-    assert Q._segment_is_canonical(qdir, s0)
-    assert not Q._segment_is_canonical(qdir, s1)
-    # a recount (stale sidecar) demotes: provenance is unknown
-    os.unlink(Q._count_path(qdir, s0))
-    assert Q._segment_count(qdir, s0) == 1
-    assert not Q._segment_is_canonical(qdir, s0)
-    # sidecar byte-size mismatch also demotes (truncation)
-    s2 = Q.publish(qdir, [("a", "b"), ("c", "d")])
-    with open(Q._seg_path(qdir, s2), "w") as f:
-        f.write("")
-    assert not Q._segment_is_canonical(qdir, s2)
 
 
 # --- round-12 task #1: the driver-tail-capture contract ------------------

@@ -293,73 +293,7 @@ def test_query_fuzz_is_seed_deterministic():
     assert a  # silence unused-var lint paths
 
 
-# --- fqueue span seek index (round-13 scale fix) ------------------------
-
-
-def test_span_seek_index_decode_equivalence(tmp_path):
-    """Span reads through the byte-offset seek index must be
-    byte-identical to the scan-from-zero path: every span boundary
-    around the _OFFSET_EVERY checkpoints, with and without a persisted
-    sidecar, and with a STALE (wrong-size) sidecar that must be
-    rebuilt, not trusted."""
-    import labs_stream_processing_examples_scala_spark.sources.queue_source as QS
-
-    qdir = str(tmp_path / "q")
-    n = QS._OFFSET_EVERY * 2 + 1234  # spans 3 checkpoints
-    seg = QS.publish(qdir, ((str(i), f"v{i}") for i in range(n)), codec="jsonl")
-
-    def span(a, b):
-        rows = []
-        for batch in QS._read_segment_batches(qdir, seg, a, b):
-            rows.extend(zip(batch.column("key").to_pylist(), batch.column("value").to_pylist()))
-        return rows
-
-    probes = [
-        (0, 10),
-        (QS._OFFSET_EVERY - 2, QS._OFFSET_EVERY + 2),
-        (QS._OFFSET_EVERY, QS._OFFSET_EVERY + 5),
-        (2 * QS._OFFSET_EVERY + 100, n),
-        (n - 3, n),
-    ]
-    # cold: no sidecar — the first >=EVERY span builds and persists it
-    QS._OFFSETS_CACHE.clear()
-    import os as _os
-
-    assert not _os.path.exists(QS._offsets_path(qdir, seg))
-    cold = {p: span(*p) for p in probes}
-    assert _os.path.exists(QS._offsets_path(qdir, seg)), "sidecar not persisted"
-    # warm: sidecar + cache in play — identical rows
-    warm = {p: span(*p) for p in probes}
-    assert warm == cold
-    for (a, b), rows in cold.items():
-        assert [k for k, _ in rows] == [str(i) for i in range(a, min(b, n))], (a, b)
-    # stale sidecar (wrong size) must be ignored and rebuilt
-    QS._OFFSETS_CACHE.clear()
-    with open(QS._offsets_path(qdir, seg), "w", encoding="utf-8") as f:
-        f.write(f"1:{QS._OFFSET_EVERY}:0,5")  # nonsense offsets, wrong size
-    assert span(QS._OFFSET_EVERY, QS._OFFSET_EVERY + 5) == cold[(QS._OFFSET_EVERY, QS._OFFSET_EVERY + 5)]
-    with open(QS._offsets_path(qdir, seg), encoding="utf-8") as f:
-        assert f.read().split(":", 1)[0] != "1", "stale sidecar not rebuilt"
-
-
-def test_span_seek_index_offsets_are_exact(tmp_path):
-    """offsets[k] must be the byte position of row k*EVERY exactly —
-    seek+read from it yields that row's line."""
-    import labs_stream_processing_examples_scala_spark.sources.queue_source as QS
-
-    qdir = str(tmp_path / "q")
-    n = QS._OFFSET_EVERY + 50
-    seg = QS.publish(qdir, ((str(i), "x") for i in range(n)), codec="jsonl")
-    import json as _json
-    import os as _os
-
-    size = _os.path.getsize(QS._seg_path(qdir, seg))
-    offs = QS._segment_offsets(qdir, seg, size)
-    assert offs[0] == 0 and len(offs) == 2
-    with open(QS._seg_path(qdir, seg), "rb") as f:
-        f.seek(offs[1])
-        rec = _json.loads(f.readline())
-    assert rec["key"] == str(QS._OFFSET_EVERY)
+# --- fqueue segment recount -------------------------------------------
 
 
 def test_segment_count_tolerates_purge_race(tmp_path):

@@ -1,6 +1,7 @@
-"""Regression tests for the round-14 fixes: the four round-13 ADVICE
-findings (round-tie adjudication unit clamp, schema-gated adjudication,
-hardcoded tool paths in a test, stale _offsets sidecar accumulation)."""
+"""Regression tests for the round-14 fixes: round-13 ADVICE findings
+(round-tie adjudication unit clamp, schema-gated adjudication,
+hardcoded tool paths in a test), the fqueue Arrow segment format and
+its ``columns`` projection."""
 
 from __future__ import annotations
 
@@ -85,78 +86,57 @@ def test_adjudicate_round_tie_gated_on_schema_match():
     assert _adjudicate(gs, 0, 1, cols_match=False) == "spark-empty-grouping-sets"
 
 
-# --- verdict task 3: the fqueue arrow segment codec --------------------
-# (the full 44-test scenario battery additionally runs under
-#  FQUEUE_DEFAULT_CODEC=arrow as a round artifact — COVERAGE.md)
+# --- the fqueue segment format: Arrow IPC files -------------------------
 
 
 def test_arrow_codec_roundtrip_matches_jsonl(tmp_path):
-    """Same records through both codecs must decode to identical
-    (seg, pos, key, value) rows — the wire format is an encoding
-    choice, never a semantics choice."""
+    """Published records read back exactly, in order: a None key stays
+    NULL (the poison discriminator), unicode and tabs survive, and a
+    value of None becomes the string "None"."""
     from labs_stream_processing_examples_scala_spark.sources import queue_source as Q
 
-    recs = [(f"k{i}", f"v{i}-é中\t") for i in range(500)] + [(None, "nullkey")]
-    rows = {}
-    for codec in ("jsonl", "arrow"):
-        qdir = str(tmp_path / codec)
-        Q.publish(qdir, recs, codec=codec)
-        rows[codec] = [
-            r for s in Q._list_segments(qdir) for r in Q._read_segment_rows(qdir, s)
-        ]
-    assert rows["jsonl"] == rows["arrow"] and len(rows["arrow"]) == 501
+    recs = [(f"k{i}", f"v{i}-é中\t") for i in range(500)] + [
+        (None, "nullkey"),
+        ("nullvalue", None),
+    ]
+    qdir = str(tmp_path / "q")
+    seg = Q.publish(qdir, recs)
+    rows = list(Q._read_segment_rows(qdir, seg))
+    assert rows == [
+        (seg, i, k, "None" if v is None else v) for i, (k, v) in enumerate(recs)
+    ]
+    assert rows[500][2] is None and rows[501][3] == "None"
 
 
-def test_arrow_codec_pin_is_immutable_and_race_safe(tmp_path):
-    """The _codec marker is first-wins: a conflicting explicit codec
-    raises before writing any segment; implicit publishes adopt the
-    winner. Two racing producers with different codecs resolve to
-    exactly one marker."""
-    import threading
-
-    from labs_stream_processing_examples_scala_spark.sources import queue_source as Q
-
+def test_legacy_jsonl_segment_is_refused(tmp_path):
+    """A queue holding a segment in the retired JSONL format must raise,
+    naming the file, from both the producer and the stream planner —
+    skipping it would silently drop its messages."""
     import pytest
 
-    qdir = str(tmp_path / "q")
-    Q.publish(qdir, [("a", "1")], codec="arrow")
-    with pytest.raises(ValueError, match="pinned to codec 'arrow'"):
-        Q.publish(qdir, [("b", "2")], codec="jsonl")
-    # implicit follows the marker; no jsonl segment ever appeared
-    Q.publish(qdir, [("c", "3")])
-    import os
+    from labs_stream_processing_examples_scala_spark.sources import queue_source as Q
 
-    assert all(f.endswith(".arrow") for f in os.listdir(qdir) if f.startswith("seg-"))
-    # race: two threads pin different codecs on a FRESH queue — exactly
-    # one wins, the other raises (never a mixed-extension queue)
-    q2 = str(tmp_path / "q2")
-    outcomes = []
-
-    def pub(codec):
-        try:
-            Q.publish(q2, [(codec, "x")], codec=codec)
-            outcomes.append(("ok", codec))
-        except ValueError:
-            outcomes.append(("conflict", codec))
-
-    ts = [threading.Thread(target=pub, args=(c,)) for c in ("jsonl", "arrow")]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join()
-    exts = {f.rsplit(".", 1)[1] for f in os.listdir(q2) if f.startswith("seg-")}
-    assert len(exts) == 1, f"mixed-codec queue: {exts}"
+    qdir = tmp_path / "q"
+    qdir.mkdir()
+    (qdir / "seg-000000000000.jsonl").write_text('{"key": "a", "value": "1"}\n')
+    with pytest.raises(ValueError, match="seg-000000000000.jsonl"):
+        Q.publish(str(qdir), [("b", "2")])
+    # the refused publish left no stage file or segment behind
+    assert sorted(os.listdir(qdir)) == ["seg-000000000000.jsonl"]
+    reader = Q.QueueStreamReader({"path": str(qdir)})
+    with pytest.raises(ValueError, match="seg-000000000000.jsonl"):
+        reader.latestOffset()
 
 
 def test_arrow_codec_stream_roundtrip_exact(spark, tmp_path):
-    """s4_queue_roundtrip's shape on the arrow codec: publish → Spark
-    availableNow stream → parquet, byte-identical key/value, poison
-    rows (key NULL) intact, offsets/ACK machinery codec-blind."""
+    """s4_queue_roundtrip's shape: publish → Spark availableNow stream
+    → parquet, byte-identical key/value, poison rows (key NULL)
+    intact."""
     from labs_stream_processing_examples_scala_spark.sources import queue_source as Q
 
     qdir = str(tmp_path / "q")
     Q.register(spark)
-    Q.publish(qdir, [(str(i), f"m{i}") for i in range(10)], codec="arrow")
+    Q.publish(qdir, [(str(i), f"m{i}") for i in range(10)])
     Q.publish_poison(qdir, ['{"torn', "noise"])
     Q.publish(qdir, [("10", "m10")])
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
@@ -186,7 +166,7 @@ def test_arrow_uniform_block_jump_matches_walk(tmp_path):
 
     qdir = str(tmp_path / "q")
     n = Q._ARROW_BATCH_ROWS + 137  # two IPC batches
-    Q.publish(qdir, ((str(i), "x") for i in range(n)), codec="arrow")
+    Q.publish(qdir, ((str(i), "x") for i in range(n)))
     probes = [
         (0, 5),
         (Q._ARROW_BATCH_ROWS - 2, Q._ARROW_BATCH_ROWS + 2),
@@ -206,13 +186,13 @@ def test_arrow_uniform_block_jump_matches_walk(tmp_path):
 
 
 def test_arrow_purge_truncation_reads_empty(tmp_path):
-    """Retention truncates arrow segments in place like jsonl ones:
-    0 bytes ⇒ 0 rows everywhere, slot never reused, no reader crash."""
+    """Retention truncates segments in place: 0 bytes ⇒ 0 rows
+    everywhere, slot never reused, no reader crash."""
     from labs_stream_processing_examples_scala_spark.sources import queue_source as Q
 
     qdir = str(tmp_path / "q")
-    Q.publish(qdir, [("a", "1"), ("b", "2")], codec="arrow")
-    Q.publish(qdir, [("c", "3")], codec="arrow")
+    Q.publish(qdir, [("a", "1"), ("b", "2")])
+    Q.publish(qdir, [("c", "3")])
     assert Q._purge_segment(qdir, 0)
     assert Q._segment_count(qdir, 0) == 0
     assert list(Q._read_segment_batches(qdir, 0)) == []
@@ -222,8 +202,8 @@ def test_arrow_purge_truncation_reads_empty(tmp_path):
 
 
 def test_arrow_queue_sink_publishes_arrow_segments(spark, tmp_path):
-    """queue_sink(codec='arrow') publishes executor-side IPC segments;
-    the digest-marker idempotence contract is codec-blind."""
+    """queue_sink publishes executor-side IPC segments, idempotent per
+    (batch, partition, digest) under a producer marker."""
     from labs_stream_processing_examples_scala_spark.sources import queue_source as Q
 
     import os
@@ -232,7 +212,7 @@ def test_arrow_queue_sink_publishes_arrow_segments(spark, tmp_path):
     df = spark.createDataFrame(
         [(str(i), f"v{i}") for i in range(20)], "key string, value string"
     ).repartition(3)
-    sink = Q.queue_sink(qdir, producer_id="prod-ar", codec="arrow")
+    sink = Q.queue_sink(qdir, producer_id="prod-ar")
     sink(df, 0)
     segs = Q._list_segments(qdir)
     assert segs and all(
@@ -302,27 +282,6 @@ def test_recall_floor_discipline():
         assert identity or got - floor >= 0.15, (name, floor, got)
 
 
-# --- ADVICE 4: retention left _offsets sidecars behind forever ---------
-
-
-def test_purge_removes_offsets_sidecar(tmp_path):
-    """_purge_segment truncates the data and must also unlink the
-    segment's seek-index sidecar (round-13 ADVICE: stale _offsets files
-    otherwise accumulate unboundedly on long-lived queues)."""
-    from labs_stream_processing_examples_scala_spark.sources import queue_source as QS
-
-    qdir = str(tmp_path / "q")
-    seg = QS.publish(qdir, [("k", f"v{i}") for i in range(10)])
-    # simulate a reader having built the seek index for this segment
-    size = os.path.getsize(QS._seg_path(qdir, seg))
-    QS._atomic_write(QS._offsets_path(qdir, seg), f"{size}:{QS._OFFSET_EVERY}:0")
-    assert os.path.exists(QS._offsets_path(qdir, seg))
-    assert QS._purge_segment(qdir, seg)
-    assert not os.path.exists(QS._offsets_path(qdir, seg))
-    # idempotent second purge (already empty) must not raise either
-    assert not QS._purge_segment(qdir, seg)
-
-
 # --- columns projection option (DSv2 python sources get no planner ----
 #     column pruning; the option is the engine's stand-in, added for
 #     the stream-bench finding that the (seg, pos) broker-offset
@@ -332,45 +291,44 @@ def test_purge_removes_offsets_sidecar(tmp_path):
 def test_columns_option_prunes_schema_and_values(spark, tmp_path):
     """`.option("columns", "key,value")` must shrink the declared
     schema, normalize to canonical order, and return exactly the full
-    read's projection — on BOTH codecs, batch and streaming reads."""
+    read's projection — batch and streaming reads."""
     from labs_stream_processing_examples_scala_spark.sources import queue_source as Q
 
     Q.register(spark)
-    for codec in ("jsonl", "arrow"):
-        qdir = str(tmp_path / codec)
-        Q.publish(qdir, [(str(i), f"v{i}") for i in range(300)], codec=codec)
-        full = spark.read.format("fqueue").option("path", qdir).load()
-        kv = (
-            spark.read.format("fqueue")
-            .option("path", qdir)
-            # reversed request: canonical order must win
-            .option("columns", "value,key")
-            .load()
-        )
-        assert kv.columns == ["key", "value"]
-        assert kv.exceptAll(full.select("key", "value")).count() == 0
-        assert full.select("key", "value").exceptAll(kv).count() == 0
-        sdf = (
-            spark.readStream.format("fqueue")
-            .option("path", qdir)
-            .option("rows_per_batch", 300)
-            .option("rows_per_partition", 64)
-            .option("columns", "key,value")
-            .load()
-        )
-        assert sdf.columns == ["key", "value"]
-        out, ckpt = str(tmp_path / f"out_{codec}"), str(tmp_path / f"ck_{codec}")
-        q = (
-            sdf.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = spark.read.parquet(out)
-        assert got.columns == ["key", "value"]
-        assert got.exceptAll(full.select("key", "value")).count() == 0
+    qdir = str(tmp_path / "q")
+    Q.publish(qdir, [(str(i), f"v{i}") for i in range(300)])
+    full = spark.read.format("fqueue").option("path", qdir).load()
+    kv = (
+        spark.read.format("fqueue")
+        .option("path", qdir)
+        # reversed request: canonical order must win
+        .option("columns", "value,key")
+        .load()
+    )
+    assert kv.columns == ["key", "value"]
+    assert kv.exceptAll(full.select("key", "value")).count() == 0
+    assert full.select("key", "value").exceptAll(kv).count() == 0
+    sdf = (
+        spark.readStream.format("fqueue")
+        .option("path", qdir)
+        .option("rows_per_batch", 300)
+        .option("rows_per_partition", 64)
+        .option("columns", "key,value")
+        .load()
+    )
+    assert sdf.columns == ["key", "value"]
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    q = (
+        sdf.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = spark.read.parquet(out)
+    assert got.columns == ["key", "value"]
+    assert got.exceptAll(full.select("key", "value")).count() == 0
 
 
 def test_columns_option_rejects_unknown_names():
@@ -395,7 +353,7 @@ def test_columns_option_competing_consumer(spark, tmp_path):
 
     Q.register(spark)
     qdir = str(tmp_path / "q")
-    Q.publish(qdir, [(str(i), f"v{i}") for i in range(200)], codec="arrow")
+    Q.publish(qdir, [(str(i), f"v{i}") for i in range(200)])
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     q = (
         spark.readStream.format("fqueue")

@@ -75,18 +75,10 @@ def test_funnel_plan_is_single_shuffle(spark):
         conversion_funnel,
     )
 
-    plan = (
-        conversion_funnel(spark, SF_SMOKE)
-        ._jdf.queryExecution()
-        .explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-    )
-    import re
+    from tools.plan_audit import plan_of, shuffle_exchange_count
 
-    assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 1, plan
+    plan = plan_of(conversion_funnel(spark, SF_SMOKE))
+    assert shuffle_exchange_count(plan) == 1, plan
     for node in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin"):
         assert node not in plan
 
@@ -100,20 +92,12 @@ def test_dup_span_stats_single_gram_shuffle(spark):
         dup_span_stats,
     )
 
-    plan = (
-        dup_span_stats(spark, SF_SMOKE)
-        ._jdf.queryExecution()
-        .explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-    )
-    import re
+    from tools.plan_audit import plan_of, shuffle_exchange_count
 
-    # ≤3 exchanges total: spread (inside the persisted word-hash cache
+    plan = plan_of(dup_span_stats(spark, SF_SMOKE))
+    # ≤3 distinct shuffles: spread (inside the persisted word-hash cache
     # build), repartition(h), final groupBy(doc_id) — the old shape had 4
-    assert len(re.findall(r"\(\d+\) Exchange\b", plan)) <= 3, plan
+    assert shuffle_exchange_count(plan) <= 3, plan
 
 
 def test_bench_sidecar_is_cpu_qualified():

@@ -230,6 +230,36 @@ def test_kill_and_restart_recovers_exactly(spark, tmp_path):
     assert rec["rows_replayed_or_new"] > 0, rec
 
 
+def test_restart_after_kill_during_first_offset_write(spark, tmp_path):
+    """A query stopped while writing its first offset-log entry leaves
+    only a hidden temp file in offsets/ (seen under tools/chaos_fuzz.py
+    kills). Spark 4.1 refuses to start batch 0 on a non-empty
+    checkpoint, so the restart must clear that aborted write and then
+    deliver every message."""
+    import os
+
+    from labs_stream_processing_examples_scala_spark.sources import queue_source as Q
+
+    qdir = str(tmp_path / "q")
+    Q.publish(qdir, [(str(i), f"Input Data: {i}") for i in range(50)])
+    Q.register(spark)
+    pipe = _pipeline(tmp_path, chaos=False)
+    offsets = tmp_path / "ckpt" / "offsets"
+    offsets.mkdir(parents=True)
+    (offsets / ".0.6f1c2a7e-0000-4000-8000-000000000000.tmp").write_text("v1\n")
+    msgs = (
+        spark.readStream.format("fqueue")
+        .option("path", qdir)
+        .load()
+        .select(F.col("key").cast("long").alias("id"), F.col("value"))
+    )
+    q = pipe.start(msgs, trigger_once=True)
+    q.awaitTermination(120)
+    assert q.exception() is None, q.exception()
+    assert pipe.output(spark).count() == 50
+    assert "0" in os.listdir(offsets)
+
+
 def test_incremental_dedup_equals_batch_and_replays_idempotently(spark, tmp_path):
     """Incremental LSH dedup (streaming/incremental_dedup.py): the
     union of per-batch pair discoveries equals the batch operator's

@@ -23,9 +23,8 @@ poison lines), timed consumer runs killed at random offsets (sleep
 U(0.15, 1.6) s then stop — batch barriers and mid-batch/mid-sink
 windows both land, depending where the clock falls), competing-member
 crashes with same-id restarts (claim re-adoption), broker retention
-(sync group ACK + purge) mid-schedule, and a random wire codec
-(jsonl/arrow) per schedule. A final drain (processAllAvailable) closes
-every schedule before the ledger check.
+(sync group ACK + purge) mid-schedule. A final drain
+(processAllAvailable) closes every schedule before the ledger check.
 
 Usage:
   python tools/chaos_fuzz.py [--seed 140] [--schedules 50]
@@ -135,7 +134,6 @@ def run_schedule(spark, seed: int, idx: int) -> dict:
     rng = random.Random((seed << 16) ^ idx)
     work = tempfile.mkdtemp(prefix=f"chaos_{idx}_")
     qdir = f"{work}/q"
-    codec = rng.choice(["jsonl", "arrow"])
     competing = rng.random() < 0.4
     rows_per_batch = rng.choice([100, 200, 400])
     log: list[str] = []
@@ -148,7 +146,7 @@ def run_schedule(spark, seed: int, idx: int) -> dict:
         n = rng.randint(150, 600)
         base = len(published)
         recs = [(str(base + i), f"chaos-{seed}-{idx}-{base + i}") for i in range(n)]
-        QS.publish(qdir, recs, codec=codec)
+        QS.publish(qdir, recs)
         published.extend(v for _, v in recs)
         if rng.random() < 0.5:
             bad = [f"poison!!{seed}.{idx}.{n_wave}.{j}" for j in range(rng.randint(1, 3))]
@@ -215,7 +213,6 @@ def run_schedule(spark, seed: int, idx: int) -> dict:
         return {
             "seed": seed,
             "index": idx,
-            "codec": codec,
             "mode": "competing" if competing else "linear",
             "rows_per_batch": rows_per_batch,
             "published": len(published),
@@ -256,7 +253,7 @@ def main() -> int:
         results.append(r)
         status = "ok" if r["ok"] else "VIOLATION"
         print(
-            f"schedule {i}: {status} ({r.get('mode')}, {r.get('codec')}, "
+            f"schedule {i}: {status} ({r.get('mode')}, "
             f"published={r.get('published')}, poison={r.get('poison')})",
             file=sys.stderr,
         )
@@ -271,16 +268,12 @@ def main() -> int:
             m: sum(1 for r in results if r.get("mode") == m)
             for m in ("linear", "competing")
         },
-        "codecs": {
-            c: sum(1 for r in results if r.get("codec") == c)
-            for c in ("jsonl", "arrow")
-        },
         "published_total": sum(r.get("published", 0) for r in results),
         "elapsed_s": round(time.time() - t0, 1),
     }
     if args.json:
         Path(args.json).write_text(json.dumps(record, indent=1))
-    print(json.dumps({k: record[k] for k in ("seed", "schedules", "violations_n", "modes", "codecs", "published_total", "elapsed_s")}))
+    print(json.dumps({k: record[k] for k in ("seed", "schedules", "violations_n", "modes", "published_total", "elapsed_s")}))
     spark.stop()
     return 0 if not violations else 1
 

@@ -17,7 +17,6 @@ eager builders — pagerank, ANN builds — still run their build jobs).
 from __future__ import annotations
 
 import json
-import re
 import sys
 import time
 from pathlib import Path
@@ -26,24 +25,14 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod
 from labs_stream_processing_examples_scala_spark import get_spark
+from tools.plan_audit import plan_of, shuffle_exchange_count
 
 import bench as benchmod
 
 
-def plan_of(df) -> str:
-    qe = df._jdf.queryExecution()
-    jvm = df.sparkSession._jvm
-    return qe.explainString(
-        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-
-
-_EXCHANGE = re.compile(r"^\s*[+:*\-| ]*\(\d+\) Exchange\b", re.M)
-
-
 def plan_stats(plan: str) -> dict:
     return {
-        "exchanges": len(_EXCHANGE.findall(plan)),
+        "exchanges": shuffle_exchange_count(plan),
         "smj": plan.count("SortMergeJoin"),
         "bhj": plan.count("BroadcastHashJoin"),
         "shj": plan.count("ShuffledHashJoin"),

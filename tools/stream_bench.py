@@ -124,7 +124,7 @@ def main() -> None:
         )
         QS.queue_sink(qdir)(batch_msgs, 0)
 
-        def queue_msgs(rows_per_batch: int | None = None, path: str = qdir):
+        def queue_msgs(rows_per_batch: int | None = None):
             # rows_per_batch per queue_bench's r13 sweep (250k →
             # ~310-330k rows/s, 500k → ~466-582k, 1M → ~520-628k,
             # 2M → ~540-715k): each micro-batch pays a fixed DSv2
@@ -137,7 +137,7 @@ def main() -> None:
             # same session) measured 65k spans at 2.0-2.5 s vs 3.1 s
             # for 32k/16k — each DSv2 Python read task carries a fixed
             # cost, so halving the span to fill all 32 cores LOSES to
-            # 16 well-fed tasks at this payload size (~2 MB JSONL/span)
+            # 16 well-fed tasks at this payload size
             # the budget covers the backlog unless a multi-batch form is
             # explicitly requested (the 2M hardcode predated the
             # parameterized n_rows — at 20M it silently measured 10
@@ -152,7 +152,7 @@ def main() -> None:
             rpp = 65_536 if n_rows <= 4_000_000 else 262_144
             return (
                 spark.readStream.format("fqueue")
-                .option("path", path)
+                .option("path", qdir)
                 .option("rows_per_batch", rows_per_batch)
                 .option("rows_per_partition", rpp)
                 # the pipeline consumes only the payload: declare it so
@@ -168,15 +168,6 @@ def main() -> None:
         fqueue_fed = _run_leg(spark, work, "queue", queue_msgs())
         fqueue_fed_1m = _run_leg(spark, work, "queue_1m", queue_msgs(1_000_000))
 
-        # arrow-codec leg (round-13 verdict task #3): the same messages
-        # through the binary wire format — no JSON decode on the
-        # consume path; each 65536-row span is one footer-indexed IPC
-        # batch. Target: within ~1.25× of file-fed on this protocol.
-        qdir_a = f"{work}/qa"
-        QS.queue_sink(qdir_a, codec="arrow")(batch_msgs, 0)
-        _run_leg(spark, work, "queue_arrow_warm", queue_msgs(path=qdir_a))
-        fqueue_fed_arrow = _run_leg(spark, work, "queue_arrow", queue_msgs(path=qdir_a))
-
         end_job_ms = benchmod._job_probe_ms(spark)
         calib_end = benchmod._calibrate()
         record = {
@@ -187,9 +178,8 @@ def main() -> None:
             "methodology": "warm-lap-r12",
             "n_rows": n_rows,
             "file_fed": file_fed,
-            "fqueue_fed": fqueue_fed,  # sweep-argmax batch budget (2M), jsonl
-            "fqueue_fed_rpb1m": fqueue_fed_1m,  # multi-batch form, jsonl
-            "fqueue_fed_arrow": fqueue_fed_arrow,  # binary codec (r13 task #3)
+            "fqueue_fed": fqueue_fed,  # sweep-argmax batch budget (2M)
+            "fqueue_fed_rpb1m": fqueue_fed_1m,  # multi-batch form
             "sf_dir": sf_dir,
             "calibration": {
                 "start_py_ms": calib_start["calib_py_ms"],
