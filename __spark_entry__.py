@@ -73,19 +73,6 @@ def _s1_tick_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.format("tick").option("n", 1000).load()
 
 
-_QUEUE_DIRS: dict[tuple, str] = {}
-_QUEUE_TMP: list[str] = []
-
-import atexit as _atexit  # noqa: E402
-import shutil as _shutil  # noqa: E402
-
-
-@_atexit.register
-def _cleanup_queue_tmp() -> None:
-    for p in _QUEUE_TMP:
-        _shutil.rmtree(p, ignore_errors=True)
-
-
 def _s4_queue_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round 9: the broker-shaped queue source, ORACLE-checked (not just
     scenario-tested): the 1000 lowest event_ids published as messages
@@ -93,14 +80,10 @@ def _s4_queue_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract, reference README.md:7), read back via format('fqueue').
     The publish is a fixed-size driver-side producer call (1000 rows),
     the read is the parallel per-segment batch scan."""
-    import tempfile
-
+    from labs_stream_processing_examples_scala_spark.session import memo_dir
     from labs_stream_processing_examples_scala_spark.sources import queue_source as Q
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _QUEUE_DIRS:
-        work = tempfile.mkdtemp(prefix="fqueue_reg_")
-        _QUEUE_TMP.append(work)
+    def build(work: str) -> None:
         rows = (
             load_table(spark, sf_dir, "events")
             .select("event_id")
@@ -112,14 +95,10 @@ def _s4_queue_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             work,
             [(str(r.event_id), f"Input Data: {r.event_id}") for r in rows],
         )
-        _QUEUE_DIRS[key] = work
+
+    path = memo_dir(spark, sf_dir, "fqueue_reg", (), build)
     Q.register(spark)
-    return (
-        spark.read.format("fqueue")
-        .option("path", _QUEUE_DIRS[key])
-        .load()
-        .select("key", "value")
-    )
+    return spark.read.format("fqueue").option("path", path).load().select("key", "value")
 
 
 # --- P-queries: scalar transforms + errors-as-data (FIXTURES.md §4) ---

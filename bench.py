@@ -249,8 +249,8 @@ MT_PROBE_PREFIXES = ("x_sim_",)
 
 # query families that warm SESSION CACHES on first run (dedup shingle/
 # banded frames, similarity signature caches, NSW graph cache, BPE
-# merge tables, LM model, corpus shingle reuse — grep applicationId
-# keys in operators/): their retry re-runs WARM, so a retry time can
+# merge tables, LM model, corpus shingle reuse — the memo/memo_dir
+# calls in operators/ and streaming/): their retry re-runs WARM, so a retry time can
 # unfairly undercut a legitimate cold first run. For these, the FIRST
 # run stays the defended number (its probe stamp tells the reader how
 # dirty its window was); the retry is recorded alongside as evidence.
@@ -536,10 +536,12 @@ def main() -> None:
         sidecar = None  # sidecar is best-effort; stdout line is the contract
     line = compact_line(record, timings, retries, errors, sidecar, sf, cpus)
     try:
-        from labs_stream_processing_examples_scala_spark import release_persisted_rdds
-        from labs_stream_processing_examples_scala_spark.operators import dedup as _dedup
+        from labs_stream_processing_examples_scala_spark.session import (
+            invalidate,
+            release_persisted_rdds,
+        )
 
-        _dedup.invalidate_cache()
+        invalidate()
         release_persisted_rdds(spark)
         spark.stop()
     except Exception as e:  # noqa: BLE001 — cleanup must not eat the record

@@ -50,40 +50,34 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from labs_stream_processing_examples_scala_spark.session import memo
 from labs_stream_processing_examples_scala_spark.sources.batch import load_table
 
 N_MERGES = 8  # registry/bench default; tests use the same
 DRIVER_VOCAB_MAX = 100_000  # word-count rows the driver loop may hold
 
 
-# the word-frequency table is consumed by both the training loop and
-# the segmentation dictionary — persist it once per (session, sf_dir)
-# so the corpus is scanned once, not once per consumer. Invalidated by
-# dedup.invalidate_cache; swept by the session teardown like the
-# shingle/signature caches.
-_WF_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def word_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """word → count over documents — the ONE corpus-sized step."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _WF_CACHE:
-        return _WF_CACHE[key]
+    """word → count over documents — the ONE corpus-sized step. Consumed
+    by both the training loop and the segmentation dictionary, so it is
+    persisted once per (session, sf_dir) in the session-cache registry:
+    the corpus is scanned once, not once per consumer."""
     from labs_stream_processing_examples_scala_spark.operators.dedup import _spread
 
-    # _spread like the sibling per-row-fold scans (lm.bigram_counts,
-    # text.repetition_stats): the single-parquet fixture is 1 scan
-    # partition, and the corpus-sized split+explode would serialize
-    # through one core before the groupBy (round-12 self-review)
-    d = _spread(load_table(spark, sf_dir, "documents"), spark)
-    out = (
-        d.select(F.explode(F.filter(F.split("text", " "), lambda w: w != "")).alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("wc"))
-        .persist()
-    )
-    _WF_CACHE[key] = out
-    return out
+    def build() -> DataFrame:
+        # _spread like the sibling per-row-fold scans (lm.bigram_counts,
+        # text.repetition_stats): the single-parquet fixture is 1 scan
+        # partition, and the corpus-sized split+explode would serialize
+        # through one core before the groupBy (round-12 self-review)
+        d = _spread(load_table(spark, sf_dir, "documents"), spark)
+        return (
+            d.select(F.explode(F.filter(F.split("text", " "), lambda w: w != "")).alias("w"))
+            .groupBy("w")
+            .agg(F.count("*").alias("wc"))
+            .persist()
+        )
+
+    return memo(spark, sf_dir, "word_freqs", (), build)
 
 
 def _merge_adjacent(syms: Column, left: str, right: str) -> Column:
@@ -126,13 +120,6 @@ def _pair_counts(vocab: DataFrame) -> DataFrame:
     )
 
 
-# merges are deterministic per (session, sf_dir, n_merges); the cache
-# saves the driver-sequential loop when segmentation follows training
-# in the same session (registry + bench both do). Entries are plain
-# Python lists — nothing persisted, so no lifecycle to manage.
-_MERGE_CACHE: dict[tuple[str, str, int], list[tuple[int, str, str, int]]] = {}
-
-
 def bpe_train_merges(
     spark: SparkSession, sf_dir: str, n_merges: int = N_MERGES
 ) -> list[tuple[int, str, str, int]]:
@@ -143,10 +130,18 @@ def bpe_train_merges(
     the PERSISTED previous vocabulary and materializes it as a side
     effect of the argmax job — one Spark job per merge, with the
     previous generation unpersisted once its child is cached (the
-    connected-components loop's pattern, operators/dedup.py)."""
-    key = (spark.sparkContext.applicationId, sf_dir, n_merges)
-    if key in _MERGE_CACHE:
-        return list(_MERGE_CACHE[key])
+    connected-components loop's pattern, operators/dedup.py).
+
+    Merges are deterministic per (session, sf_dir, n_merges); the
+    session cache saves the driver-sequential loop when segmentation
+    follows training in the same session (registry + bench both do).
+    Callers get a copy, so the cached list cannot be mutated."""
+    return list(
+        memo(spark, sf_dir, "bpe_merges", (n_merges,), lambda: _train(spark, sf_dir, n_merges))
+    )
+
+
+def _train(spark: SparkSession, sf_dir: str, n_merges: int) -> list[tuple[int, str, str, int]]:
     wf = word_freqs(spark, sf_dir)
     # Finite-vocabulary fast path: when the aggregated word-count table
     # is small enough to hold in the driver (the common case — real BPE
@@ -156,14 +151,10 @@ def bpe_train_merges(
     # with the fully-distributed loop as the big-vocab fallback (both
     # paths share tie-break semantics; the parity test drives both).
     if wf.count() <= DRIVER_VOCAB_MAX:
-        merges = _train_driver_side(
+        return _train_driver_side(
             [(r["w"], int(r["wc"])) for r in wf.collect()], n_merges
         )
-        _MERGE_CACHE[key] = list(merges)
-        return merges
-    merges = _train_distributed(wf, n_merges)
-    _MERGE_CACHE[key] = list(merges)
-    return merges
+    return _train_distributed(wf, n_merges)
 
 
 def _train_driver_side(

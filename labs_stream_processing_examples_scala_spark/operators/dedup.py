@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from labs_stream_processing_examples_scala_spark.functions import hashing as H
+from labs_stream_processing_examples_scala_spark.session import memo
 from labs_stream_processing_examples_scala_spark.sources.batch import load_table
 
 SHINGLE_WORDS = 3
@@ -87,66 +88,6 @@ def exact_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SLICE_BIG = 1 << 30  # "to the end" length for slice()
 
-# one cached array table per (session, sf_dir) — consumers (signatures,
-# LSH pairs, ngram pairs, components) share the same materialization
-_ARR_CACHE: dict[tuple[str, str], DataFrame] = {}
-_SIMHASH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def invalidate_cache(sf_dir: str | None = None) -> None:
-    """Unpersist and drop the cached shingle arrays — all entries, or
-    only those under ``sf_dir``. Call when the parquet under a cached
-    dir changes: entries are otherwise held (and would serve stale
-    rows) for the session lifetime. Also cascades to the similarity
-    signature cache, which is derived from the same fixture dirs."""
-    for key in list(_ARR_CACHE):
-        if sf_dir is None or key[1] == sf_dir:
-            _ARR_CACHE.pop(key).unpersist()
-    for key in list(_WH_CACHE):
-        if sf_dir is None or key[1] == sf_dir:
-            _WH_CACHE.pop(key).unpersist()
-    for key in list(_SIMHASH_CACHE):
-        if sf_dir is None or key[1] == sf_dir:
-            _SIMHASH_CACHE.pop(key).unpersist()
-    for key in list(_BANDED_CACHE):
-        if sf_dir is None or key[1] == sf_dir:
-            for frame in _BANDED_CACHE.pop(key):
-                if frame is not None:
-                    frame.unpersist()
-    from labs_stream_processing_examples_scala_spark.operators import similarity as _sim
-
-    for key in list(_sim._SIG_CACHE):
-        if sf_dir is None or key[1] == sf_dir:
-            _sim._SIG_CACHE.pop(key).unpersist()
-    for key in list(_sim._PROBE_CACHE):
-        if sf_dir is None or key[1] == sf_dir:
-            _sim._PROBE_CACHE.pop(key).unpersist()
-    from labs_stream_processing_examples_scala_spark.operators import graph_ann as _gann
-
-    for key in list(_gann._GRAPH_CACHE):
-        if sf_dir is None or key[1] == sf_dir:
-            _gann._GRAPH_CACHE.pop(key).unpersist()
-    from labs_stream_processing_examples_scala_spark.operators import bpe as _bpe
-
-    for key in list(_bpe._MERGE_CACHE):
-        if sf_dir is None or key[1] == sf_dir:
-            del _bpe._MERGE_CACHE[key]  # plain lists — nothing to unpersist
-    for key in list(_bpe._WF_CACHE):
-        if sf_dir is None or key[1] == sf_dir:
-            _bpe._WF_CACHE.pop(key).unpersist()
-    from labs_stream_processing_examples_scala_spark.operators import lm as _lm
-
-    for key in list(_lm._LM_CACHE):
-        if sf_dir is None or key[1] == sf_dir:
-            _lm._LM_CACHE.pop(key).unpersist()
-    from labs_stream_processing_examples_scala_spark.operators import (
-        quantization as _qz,
-    )
-
-    for key in list(_qz._CODES_CACHE):
-        if sf_dir is None or key[1] == sf_dir:
-            _qz._CODES_CACHE.pop(key).unpersist()
-
 
 def _spread(d: DataFrame, spark: SparkSession) -> DataFrame:
     """Repartition ONLY when the scan under-parallelizes the cores.
@@ -182,13 +123,14 @@ def shingle_hash_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partition sort + distinct). Verified bit-identical to that form
     before switching.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _ARR_CACHE:
-        return _ARR_CACHE[key]
-    d = _spread(load_table(spark, sf_dir, "documents"), spark)
-    out = shingle_arrays_of(d).persist()
-    _ARR_CACHE[key] = out
-    return out
+    # one cached array table per (session, sf_dir): signatures, LSH
+    # pairs, ngram pairs and components share the materialization
+    return memo(
+        spark, sf_dir, "shingle_arrays", (),
+        lambda: shingle_arrays_of(
+            _spread(load_table(spark, sf_dir, "documents"), spark)
+        ).persist(),
+    )
 
 
 def shingle_array_col(text_col: str = "text") -> Column:
@@ -257,10 +199,6 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 # its lineage once PER SIDE). The frame is 4 tiny rows per doc, so
 # persisting it is the cheapest cache in the family; measured 294 s →
 # well under the round-9 117.8 s anchor for x_dedup_lsh_pairs at sf10.
-_BANDED_CACHE: dict[
-    tuple[str, str, str | None],
-    tuple[DataFrame | None, DataFrame, DataFrame | None],
-] = {}
 
 
 # collapse only when it pays: below this distinct-content ratio the
@@ -292,42 +230,47 @@ def lsh_rep_frames(
     per md5(text)) for the skinny doc-level expansion. Both modes are
     proven byte-identical (sf1 equivalence + forced-mode tests).
     ``force`` pins the mode for tests ('direct' / 'collapsed')."""
-    key = (spark.sparkContext.applicationId, sf_dir, force)
-    if key not in _BANDED_CACHE:
-        d = load_table(spark, sf_dir, "documents").select(
-            "doc_id", F.md5("text").alias("_ch")
+    return memo(
+        spark, sf_dir, "lsh_banded", (force,),
+        lambda: _build_rep_frames(spark, sf_dir, force),
+    )
+
+
+def _build_rep_frames(
+    spark: SparkSession, sf_dir: str, force: str | None
+) -> tuple[DataFrame | None, DataFrame, DataFrame | None]:
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", F.md5("text").alias("_ch")
+    )
+    mode = force
+    if mode is None:
+        stats = d.agg(
+            F.count("*").alias("n"), F.countDistinct("_ch").alias("r")
+        ).collect()[0]
+        mode = (
+            "direct"
+            if stats.r > LSH_COLLAPSE_RATIO * stats.n
+            else "collapsed"
         )
-        mode = force
-        if mode is None:
-            stats = d.agg(
-                F.count("*").alias("n"), F.countDistinct("_ch").alias("r")
-            ).collect()[0]
-            mode = (
-                "direct"
-                if stats.r > LSH_COLLAPSE_RATIO * stats.n
-                else "collapsed"
-            )
-        if mode == "direct":
-            banded = banded_of(minhash_signatures(spark, sf_dir)).persist()
-            _BANDED_CACHE[key] = (None, banded, None)
-        else:
-            # the keeper rule (min doc_id per content hash) is
-            # exact_dedup's — derive from it rather than restating it,
-            # so the two can never diverge (review finding)
-            reps = exact_dedup(spark, sf_dir).select(
-                F.col("content_hash").alias("_ch"),
-                F.col("keep_id").alias("rep_id"),
-            )
-            members = d.join(reps, "_ch").select("rep_id", "doc_id").persist()
-            rep_ids = members.select(F.col("rep_id").alias("doc_id")).distinct()
-            rep_arrs = (
-                shingle_hash_arrays(spark, sf_dir)
-                .join(rep_ids, "doc_id", "left_semi")
-                .persist()
-            )
-            rep_banded = banded_of(minhash_of(rep_arrs)).persist()
-            _BANDED_CACHE[key] = (rep_arrs, rep_banded, members)
-    return _BANDED_CACHE[key]
+    if mode == "direct":
+        banded = banded_of(minhash_signatures(spark, sf_dir)).persist()
+        return (None, banded, None)
+    # the keeper rule (min doc_id per content hash) is
+    # exact_dedup's — derive from it rather than restating it,
+    # so the two can never diverge (review finding)
+    reps = exact_dedup(spark, sf_dir).select(
+        F.col("content_hash").alias("_ch"),
+        F.col("keep_id").alias("rep_id"),
+    )
+    members = d.join(reps, "_ch").select("rep_id", "doc_id").persist()
+    rep_ids = members.select(F.col("rep_id").alias("doc_id")).distinct()
+    rep_arrs = (
+        shingle_hash_arrays(spark, sf_dir)
+        .join(rep_ids, "doc_id", "left_semi")
+        .persist()
+    )
+    rep_banded = banded_of(minhash_of(rep_arrs)).persist()
+    return (rep_arrs, rep_banded, members)
 
 
 # True-pathology threshold: a 64k-doc bucket is ~2.1e9 candidate pairs
@@ -721,12 +664,8 @@ def simhash_neardup_pairs(
     # same subtree, and without the barrier each side re-runs the
     # whole per-document bit-tally fold (the expensive narrow step) —
     # measured 7.6 → 3.7 s warm at sf0.1. Same (session, sf_dir)
-    # cache discipline as the shingle arrays; swept by
-    # invalidate_cache.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SIMHASH_CACHE:
-        _SIMHASH_CACHE[key] = simhash(spark, sf_dir).persist()
-    sh = _SIMHASH_CACHE[key]  # (doc_id, simhash)
+    # cache discipline as the shingle arrays.
+    sh = memo(spark, sf_dir, "simhash", (), lambda: simhash(spark, sf_dir).persist())
     band_width = SIMHASH_BITS // SIMHASH_BANDS
     arms = ", ".join(
         f"{b}, CAST(shiftright(simhash, {b * band_width}) & {(1 << band_width) - 1} AS BIGINT)"
@@ -867,10 +806,10 @@ def lsh_dedup_groups_twostar(
 SPAN_WORDS = 8  # span length for duplicated-substring detection
 
 # persisted (doc_id, wh1, wh2) word-hash arrays — same materialization
-# idea as _ARR_CACHE: the span chain references each array k times via
-# slices, and without a barrier CollapseProject would re-inline the
-# per-character fold into every reference (measured 2.3× slower)
-_WH_CACHE: dict[tuple[str, str], DataFrame] = {}
+# idea as the shingle arrays: the span chain references each array k
+# times via slices, and without a barrier CollapseProject would
+# re-inline the per-character fold into every reference (measured 2.3×
+# slower)
 
 
 def word_hash_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -879,17 +818,16 @@ def word_hash_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     beat a fused struct-accumulator fold ~2× (the struct allocates an
     InternalRow per character); both columns materialize once into the
     cache, so downstream slice references never re-run the folds."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _WH_CACHE:
-        return _WH_CACHE[key]
-    d = _spread(load_table(spark, sf_dir, "documents"), spark)
-    out = d.select(
-        "doc_id",
-        F.transform(tokens("text"), H.rolling_hash).alias("wh1"),
-        F.transform(tokens("text"), H.rolling_hash2).alias("wh2"),
-    ).persist()
-    _WH_CACHE[key] = out
-    return out
+
+    def build() -> DataFrame:
+        d = _spread(load_table(spark, sf_dir, "documents"), spark)
+        return d.select(
+            "doc_id",
+            F.transform(tokens("text"), H.rolling_hash).alias("wh1"),
+            F.transform(tokens("text"), H.rolling_hash2).alias("wh2"),
+        ).persist()
+
+    return memo(spark, sf_dir, "word_hashes", (), build)
 
 
 def dup_span_stats(spark: SparkSession, sf_dir: str, k: int = SPAN_WORDS) -> DataFrame:

@@ -54,6 +54,7 @@ if TYPE_CHECKING:  # only for the _misra_gries_partition signature
     import pyarrow as pa
 from pyspark.sql import functions as F
 
+from labs_stream_processing_examples_scala_spark.session import memo
 from labs_stream_processing_examples_scala_spark.sources.batch import load_table
 
 K_COUNTERS = 8192  # per-partition Misra-Gries capacity
@@ -106,10 +107,6 @@ def _misra_gries_partition(batches) -> Iterator["pa.RecordBatch"]:
     )
 
 
-_SUMMARY_CACHE: dict[tuple[str, str], "DataFrame"] = {}
-_SUMMARY_CACHE_MAX = 4
-
-
 def _summaries_cached(spark: SparkSession, sf_dir: str, docs: "DataFrame") -> "DataFrame":
     """Pass-1 Misra-Gries summaries, persisted + eagerly materialized
     ONCE per (session, sf_dir). The frame is tiny (≤ K×partitions
@@ -119,21 +116,15 @@ def _summaries_cached(spark: SparkSession, sf_dir: str, docs: "DataFrame") -> "D
     LRU replaces the old always-persist-never-unpersist form, which
     pinned a fresh copy per heavy_hitters() call for the session's
     lifetime (self-review finding, round 11)."""
-    from labs_stream_processing_examples_scala_spark.operators.similarity import (
-        _cache_get_refresh,
-        _cache_put_bounded,
-    )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _cache_get_refresh(_SUMMARY_CACHE, key)
-    if hit is not None:
-        return hit
-    out = docs.mapInArrow(
-        _misra_gries_partition, schema="token string, cnt long, kind string"
-    ).persist()
-    out.count()
-    _cache_put_bounded(_SUMMARY_CACHE, key, out, _SUMMARY_CACHE_MAX)
-    return out
+    def build() -> DataFrame:
+        out = docs.mapInArrow(
+            _misra_gries_partition, schema="token string, cnt long, kind string"
+        ).persist()
+        out.count()
+        return out
+
+    return memo(spark, sf_dir, "mg_summaries", (), build, bounded=True)
 
 
 def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:

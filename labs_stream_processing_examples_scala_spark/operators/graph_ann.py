@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from labs_stream_processing_examples_scala_spark.session import memo, memo_dir
 from labs_stream_processing_examples_scala_spark.sources.batch import load_table
 
 N_SHARDS = 8
@@ -61,27 +62,17 @@ def _auto_shards(n_rows: int) -> int:
     return max(N_SHARDS, -(-n_rows // SHARD_TARGET_ROWS))
 
 
-# corpus row counts are stable per (session, sf_dir) — cache them so a
-# cached nsw_build/probe doesn't pay a count() job per call
-_COUNT_CACHE: dict[tuple, int] = {}
-
-
 def _corpus_rows(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _COUNT_CACHE:
-        _COUNT_CACHE[key] = load_table(spark, sf_dir, "embeddings").count()
-    return _COUNT_CACHE[key]
+    # stable per (session, sf_dir): a cached nsw_build/probe must not
+    # pay a count() job per call
+    return memo(
+        spark, sf_dir, "corpus_rows", (),
+        lambda: load_table(spark, sf_dir, "embeddings").count(),
+    )
 
 _GRAPH_SCHEMA = (
     "part int, vec_id long, vec array<double>, nbrs array<long>"
 )
-
-# one materialized graph per (session, sf_dir, params) — probe reads the
-# build exactly once, the same cache contract as similarity._SIG_CACHE.
-# Bounded (round-9 ADVICE): graphs carry full vectors + adjacency, so a
-# parameter sweep must evict-and-unpersist, not accumulate.
-_GRAPH_CACHE: dict[tuple, DataFrame] = {}
-_GRAPH_CACHE_MAX = 4
 
 
 def _normalize_rows(vecs: np.ndarray) -> np.ndarray:
@@ -282,43 +273,24 @@ def nsw_build(
     (round-9 ADVICE)."""
     if n_shards is None:
         n_shards = _auto_shards(_corpus_rows(spark, sf_dir))
-    key = (spark.sparkContext.applicationId, sf_dir, n_shards, m)
-    from labs_stream_processing_examples_scala_spark.operators.similarity import (
-        _cache_get_refresh,
-        _cache_put_bounded,
-    )
 
-    hit = _cache_get_refresh(_GRAPH_CACHE, key)
-    if hit is not None:
-        return hit  # recency refreshed: hottest graph never evicted
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select(
-            F.col("vec_id"),
-            F.col("embedding").cast("array<double>").alias("vec"),
-            (F.pmod(F.xxhash64("vec_id"), F.lit(n_shards))).cast("int").alias("part"),
+    # one materialized graph per (session, sf_dir, params): probes read
+    # the build exactly once. Bounded (round-9 ADVICE): graphs carry
+    # full vectors + adjacency, so a parameter sweep must
+    # evict-and-unpersist, not accumulate.
+    def build() -> DataFrame:
+        e = (
+            load_table(spark, sf_dir, "embeddings")
+            .select(
+                F.col("vec_id"),
+                F.col("embedding").cast("array<double>").alias("vec"),
+                (F.pmod(F.xxhash64("vec_id"), F.lit(n_shards))).cast("int").alias("part"),
+            )
+            .repartition(n_shards, "part")
         )
-        .repartition(n_shards, "part")
-    )
+        return e.mapInPandas(make_shard_builder(m, ef_construction), _GRAPH_SCHEMA).persist()
 
-    out = e.mapInPandas(
-        make_shard_builder(m, ef_construction), _GRAPH_SCHEMA
-    ).persist()
-    _cache_put_bounded(_GRAPH_CACHE, key, out, _GRAPH_CACHE_MAX)
-    return out
-
-
-_NSW_INDEX_CACHE: dict[tuple, str] = {}
-_NSW_TMP_ROOTS: list[str] = []
-
-import atexit as _atexit  # noqa: E402
-import shutil as _shutil  # noqa: E402
-
-
-@_atexit.register
-def _cleanup_nsw_index_tmp() -> None:
-    for p in _NSW_TMP_ROOTS:
-        _shutil.rmtree(p, ignore_errors=True)
+    return memo(spark, sf_dir, "nsw_graph", (n_shards, m), build, bounded=True)
 
 
 _NSW_MANIFEST = "_nsw_meta.json"
@@ -371,7 +343,7 @@ def materialize_nsw_index(
     (the IVF tier's build_ivf_index precedent): each probe task reads
     exactly one shard's files, the build cost amortizes over every
     later query, and the index outlives the session (unlike the
-    in-memory _GRAPH_CACHE, which serves single-session reuse).
+    in-memory graph cache, which serves single-session reuse).
     Returns the index path.
 
     Only AUTO-CREATED temp paths enter the session cache (round-9
@@ -379,32 +351,25 @@ def materialize_nsw_index(
     delete or overwrite, so caching it would dangle the registry's
     default-path probes. An explicit path that already contains an
     index returns early instead of re-running the partitioned write."""
-    import tempfile
-
     from labs_stream_processing_examples_scala_spark.sources.layout import (
         write_partitioned,
     )
 
     if n_shards is None:
         n_shards = _auto_shards(_corpus_rows(spark, sf_dir))
-    key = (spark.sparkContext.applicationId, sf_dir, n_shards, m)
     meta = {"sf_dir": sf_dir, "n_shards": n_shards, "m": m}
-    explicit = path is not None
-    if explicit:
-        if _index_on_disk(path, meta):
-            return path
-        # missing or parameter-mismatched index: rebuild in place (the
-        # caller owns the path and asked for THESE parameters)
-    else:
-        if key in _NSW_INDEX_CACHE:
-            return _NSW_INDEX_CACHE[key]
-        path = tempfile.mkdtemp(prefix="nsw_index_")
-        _NSW_TMP_ROOTS.append(path)
-    g = nsw_build(spark, sf_dir, n_shards=n_shards, m=m, ef_construction=ef_construction)
-    write_partitioned(g, path, "part")
-    _write_index_manifest(path, meta)
-    if not explicit:
-        _NSW_INDEX_CACHE[key] = path
+
+    def build(out: str) -> None:
+        g = nsw_build(spark, sf_dir, n_shards=n_shards, m=m, ef_construction=ef_construction)
+        write_partitioned(g, out, "part")
+        _write_index_manifest(out, meta)
+
+    if path is None:
+        return memo_dir(spark, sf_dir, "nsw_index", (n_shards, m), build)
+    # missing or parameter-mismatched index: rebuild in place (the
+    # caller owns the path and asked for THESE parameters)
+    if not _index_on_disk(path, meta):
+        build(path)
     return path
 
 

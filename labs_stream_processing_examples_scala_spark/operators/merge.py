@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from labs_stream_processing_examples_scala_spark.session import memo_dir
 from labs_stream_processing_examples_scala_spark.sources.batch import load_table
 
 EPOCH_OPEN = "1992-01-01"
@@ -713,20 +714,37 @@ def merge_cow_cdc(
         }
 
 
-_EVOLVE_WORKDIRS: dict[tuple, str] = {}
-_EVOLVE_TMP: list[str] = []
+def _customer(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_name", "c_mktsegment", "c_acctbal"
+    )
 
 
-def _cleanup_evolve_tmp() -> None:
-    import shutil
+def _session_target(spark: SparkSession, sf_dir: str, name: str, build) -> str:
+    """The ``target`` table dir of a disk-backed registry entry: built
+    by ``build(target)`` once per (session, sf_dir) in a session temp
+    workdir."""
+    import os
 
-    for p in _EVOLVE_TMP:
-        shutil.rmtree(p, ignore_errors=True)
+    def make(work: str) -> None:
+        build(os.path.join(work, "target"))
+
+    return os.path.join(memo_dir(spark, sf_dir, name, (), make), "target")
 
 
-import atexit  # noqa: E402  (registration point, keeps the hook local)
+def _changes_target(spark: SparkSession, sf_dir: str) -> str:
+    """The partitioned SCD2 customer target at v0 (init) → v1 (the q65
+    change batch MERGEd) — shared by q69 and q71."""
+    from labs_stream_processing_examples_scala_spark.operators import cow_table as CT
 
-atexit.register(_cleanup_evolve_tmp)
+    def build(target: str) -> None:
+        CT.cow_init(scd2_init(_customer(spark, sf_dir)), target, "c_mktsegment")
+        scd2_merge_cow(
+            spark, target, _updates(spark, sf_dir),
+            "c_custkey", "u_key", "c_acctbal", "new_bal", "c_mktsegment",
+        )
+
+    return _session_target(spark, sf_dir, "merge_changes", build)
 
 
 def merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -748,20 +766,10 @@ def merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     CASE over the base customer balance reproduces the table exactly,
     and any row lost or altered by alter/merge/optimize fails the
     hash. Memoized per session like the other disk-backed entries."""
-    import os
-    import tempfile
-
     from labs_stream_processing_examples_scala_spark.operators import cow_table as CT
 
-    key = (spark.sparkContext.applicationId, sf_dir, "evolve")
-    if key not in _EVOLVE_WORKDIRS:
-        work = tempfile.mkdtemp(prefix="merge_evolve_")
-        _EVOLVE_TMP.append(work)
-        target = os.path.join(work, "target")
-        cust = load_table(spark, sf_dir, "customer").select(
-            "c_custkey", "c_name", "c_mktsegment", "c_acctbal"
-        )
-        CT.cow_init(scd2_init(cust), target, "c_mktsegment")
+    def build(target: str) -> None:
+        CT.cow_init(scd2_init(_customer(spark, sf_dir)), target, "c_mktsegment")
         CT.alter_add_column(
             target, "acct_tier", "string",
             "CASE WHEN c_acctbal >= 5000 THEN 'high' ELSE 'std' END",
@@ -771,8 +779,8 @@ def merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_custkey", "u_key", "c_acctbal", "new_bal", "c_mktsegment",
         )
         CT.optimize_cow(spark, target, "c_mktsegment", target_files_per_partition=1)
-        _EVOLVE_WORKDIRS[key] = work
-    target = os.path.join(_EVOLVE_WORKDIRS[key], "target")
+
+    target = _session_target(spark, sf_dir, "merge_evolve", build)
     return CT.read_cow(spark, target).select(
         "c_custkey",
         "c_name",
@@ -798,27 +806,9 @@ def merge_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exact-oracle shape: the three branches above as a UNION ALL in
     DuckDB. Memoized per session like the other disk-backed entries."""
-    import os
-    import tempfile
-
     from labs_stream_processing_examples_scala_spark.operators import cow_table as CT
 
-    key = (spark.sparkContext.applicationId, sf_dir, "changes")
-    if key not in _EVOLVE_WORKDIRS:
-        work = tempfile.mkdtemp(prefix="merge_changes_")
-        _EVOLVE_TMP.append(work)
-        target = os.path.join(work, "target")
-        cust = load_table(spark, sf_dir, "customer").select(
-            "c_custkey", "c_name", "c_mktsegment", "c_acctbal"
-        )
-        CT.cow_init(scd2_init(cust), target, "c_mktsegment")
-        scd2_merge_cow(
-            spark, target, _updates(spark, sf_dir),
-            "c_custkey", "u_key", "c_acctbal", "new_bal", "c_mktsegment",
-        )
-        _EVOLVE_WORKDIRS[key] = work
-    target = os.path.join(_EVOLVE_WORKDIRS[key], "target")
-    return CT.table_changes(spark, target, 0, 1).select(
+    return CT.table_changes(spark, _changes_target(spark, sf_dir), 0, 1).select(
         "c_custkey",
         "c_name",
         F.round("c_acctbal", 6).alias("acctbal"),
@@ -845,14 +835,9 @@ def merge_cdf_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     scratch definition (a missed retraction, a phantom group, a
     double-counted insert) breaks the hash. Shares the q69 workdir
     (same target, same merge); memoized per session."""
-    import os
-
     from labs_stream_processing_examples_scala_spark.operators import cow_table as CT
 
-    key = (spark.sparkContext.applicationId, sf_dir, "changes")
-    if key not in _EVOLVE_WORKDIRS:
-        merge_changes(spark, sf_dir)  # builds target + v0→v1 merge
-    target = os.path.join(_EVOLVE_WORKDIRS[key], "target")
+    target = _changes_target(spark, sf_dir)
     measures = {
         "n_versions": F.lit(1),
         "n_open": F.when(F.col("is_current"), 1).otherwise(0),
@@ -886,27 +871,17 @@ def merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_mor_table.py: base-file inodes untouched, vector rows
     ∝ matches, compaction restores a scan-only plan). Memoized per
     session like the other disk-backed entries."""
-    import os
-    import tempfile
-
     from labs_stream_processing_examples_scala_spark.operators import cow_table as CT
     from labs_stream_processing_examples_scala_spark.operators import mor_table as MT
 
-    key = (spark.sparkContext.applicationId, sf_dir, "mor")
-    if key not in _EVOLVE_WORKDIRS:
-        work = tempfile.mkdtemp(prefix="merge_mor_")
-        _EVOLVE_TMP.append(work)
-        target = os.path.join(work, "target")
-        cust = load_table(spark, sf_dir, "customer").select(
-            "c_custkey", "c_name", "c_mktsegment", "c_acctbal"
-        )
-        CT.cow_init(scd2_init(cust), target, "c_mktsegment")
+    def build(target: str) -> None:
+        CT.cow_init(scd2_init(_customer(spark, sf_dir)), target, "c_mktsegment")
         MT.mor_upsert(
             spark, target, _updates(spark, sf_dir),
             "c_custkey", "u_key", "c_acctbal", "new_bal", "c_mktsegment",
         )
-        _EVOLVE_WORKDIRS[key] = work
-    target = os.path.join(_EVOLVE_WORKDIRS[key], "target")
+
+    target = _session_target(spark, sf_dir, "merge_mor", build)
     return MT.read_mor(spark, target).select(
         "c_custkey",
         "c_name",

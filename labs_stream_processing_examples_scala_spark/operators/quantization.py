@@ -45,20 +45,11 @@ from labs_stream_processing_examples_scala_spark.operators.similarity import (
     dot,
     norm,
 )
+from labs_stream_processing_examples_scala_spark.session import memo, memo_dir
 from labs_stream_processing_examples_scala_spark.sources.batch import load_table
 
 PQ_M = 8  # subspaces
 PQ_K = 16  # codewords per subspace (4-bit codes)
-
-# trained codebooks per (session, sf_dir, m, k, n_iter, tol) — the
-# offline artifact a deployment trains once and ships as a literal
-_PQ_CACHE: dict[tuple, tuple[list[list[list[float]]], int]] = {}
-#: (session, sf_dir, m, k_codes, n_iter) → persisted (vec_id, codes).
-#: LRU-bounded like the sibling _PROBE_CACHE/_GRAPH_CACHE: each entry
-#: persists the full encoded corpus, so varying params must evict, not
-#: pin executor storage until an invalidate_cache sweep (r12 ADVICE).
-_CODES_CACHE: dict[tuple, "DataFrame"] = {}
-_CODES_CACHE_MAX = 4
 
 
 def _unit_vec(col: str = "vec") -> Column:
@@ -194,14 +185,16 @@ def pq_train(
     interpreted row eval (the whole train measured 36–40 s at EVERY
     sf, i.e. compile-bound). The Arrow form trains in ~3 s and scales
     with data, not with plan size."""
-    key = (spark.sparkContext.applicationId, sf_dir, m, k_codes, n_iter, tol)
-    if key in _PQ_CACHE:
-        return _PQ_CACHE[key]
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _dvec("embedding").alias("vec")
-    )
-    _PQ_CACHE[key] = pq_train_frame(e, m=m, k_codes=k_codes, n_iter=n_iter, tol=tol)
-    return _PQ_CACHE[key]
+
+    # the trained codebooks are the offline artifact a deployment trains
+    # once and ships as a literal
+    def build() -> tuple[list[list[list[float]]], int]:
+        e = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", _dvec("embedding").alias("vec")
+        )
+        return pq_train_frame(e, m=m, k_codes=k_codes, n_iter=n_iter, tol=tol)
+
+    return memo(spark, sf_dir, "pq_codebooks", (m, k_codes, n_iter, tol), build)
 
 
 def pq_train_frame(
@@ -352,24 +345,22 @@ def pq_encode(
     shuffle of any kind (plan-audited — MapInArrow, zero Exchange).
     Parity with the Catalyst reference fold is pinned by
     tests/test_extensions.py (numpy oracle + cross-impl agreement)."""
-    from .similarity import _cache_get_refresh, _cache_put_bounded
 
-    key = (spark.sparkContext.applicationId, sf_dir, m, k_codes, n_iter)
-    hit = _cache_get_refresh(_CODES_CACHE, key)
-    if hit is not None:
-        return hit
-    cb, _ = pq_train(spark, sf_dir, m, k_codes, n_iter)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _dvec("embedding").alias("vec")
-    )
     # persist the encoded corpus once per (session, sf_dir, params):
     # every plain-PQ probe used to re-scan the raw embeddings and re-run
     # the Arrow encode, so the 'reads M bytes per vector' claim only
     # held for the IVF-PQ tier, which materializes codes (round-12
-    # self-review). Swept by dedup.invalidate_cache like the siblings.
-    out = e.mapInArrow(_encode_map(cb), schema="vec_id long, codes array<int>").persist()
-    _cache_put_bounded(_CODES_CACHE, key, out, _CODES_CACHE_MAX)
-    return out
+    # self-review). Bounded: each entry persists the full encoded
+    # corpus, so varying params must evict, not pin executor storage
+    # (r12 ADVICE).
+    def build() -> DataFrame:
+        cb, _ = pq_train(spark, sf_dir, m, k_codes, n_iter)
+        e = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", _dvec("embedding").alias("vec")
+        )
+        return e.mapInArrow(_encode_map(cb), schema="vec_id long, codes array<int>").persist()
+
+    return memo(spark, sf_dir, "pq_codes", (m, k_codes, n_iter), build, bounded=True)
 
 
 def _adc_table(cb: list[list[list[float]]], q_unit: list[float]) -> list[list[float]]:
@@ -470,8 +461,6 @@ def pq_topk_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- IVF-PQ: cell-partitioned code table (the billion-scale layout) ---
 
-_IVFPQ_INDEX_CACHE: dict[tuple, str] = {}
-
 
 def build_ivfpq_index(
     spark: SparkSession,
@@ -494,7 +483,6 @@ def build_ivfpq_index(
     trade-off). Returns (path, centroids, codebooks); cached per
     session like the plain IVF index."""
     from labs_stream_processing_examples_scala_spark.operators.similarity import (
-        _IVF_TMP_ROOTS,
         _assign_cell,
         kmeans_train,
     )
@@ -502,30 +490,26 @@ def build_ivfpq_index(
 
     cents, _ = kmeans_train(spark, sf_dir, n_cells=n_cells, n_iter=n_iter)
     cb, _ = pq_train(spark, sf_dir, m, k_codes, n_iter)
-    key = (spark.sparkContext.applicationId, sf_dir, n_cells, m, k_codes, n_iter)
-    if key in _IVFPQ_INDEX_CACHE:
-        return _IVFPQ_INDEX_CACHE[key], cents, cb
-    import tempfile
 
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _dvec("embedding").alias("vec")
-    )
-    # Arrow encode (vec passed through) + Catalyst cell argmax: still
-    # ONE narrow pass over the scan, zero exchange before the
-    # partitioned write
-    encoded = e.mapInArrow(
-        _encode_map(cb, keep_vec=True),
-        schema="vec_id long, vec array<double>, codes array<int>",
-    )
-    assigned = encoded.select(
-        "vec_id",
-        _assign_cell([(i, c) for i, c in enumerate(cents)]).alias("cell"),
-        "codes",
-    )
-    path = tempfile.mkdtemp(prefix="ivfpq_index_")
-    _IVF_TMP_ROOTS.append(path)  # same exit-time cleanup as the IVF index
-    write_partitioned(assigned, path, "cell")
-    _IVFPQ_INDEX_CACHE[key] = path
+    def build(path: str) -> None:
+        e = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", _dvec("embedding").alias("vec")
+        )
+        # Arrow encode (vec passed through) + Catalyst cell argmax:
+        # still ONE narrow pass over the scan, zero exchange before the
+        # partitioned write
+        encoded = e.mapInArrow(
+            _encode_map(cb, keep_vec=True),
+            schema="vec_id long, vec array<double>, codes array<int>",
+        )
+        assigned = encoded.select(
+            "vec_id",
+            _assign_cell([(i, c) for i, c in enumerate(cents)]).alias("cell"),
+            "codes",
+        )
+        write_partitioned(assigned, path, "cell")
+
+    path = memo_dir(spark, sf_dir, "ivfpq_index", (n_cells, m, k_codes, n_iter), build)
     return path, cents, cb
 
 
@@ -574,25 +558,22 @@ def ivfpq_topk(
 
 # --- scalar quantization (int8) — the low-loss tier of the family ---
 
-_SQ_CACHE: dict[tuple, tuple[list[float], list[float]]] = {}
-
 
 def sq_stats(spark: SparkSession, sf_dir: str) -> tuple[list[float], list[float]]:
     """Per-dimension (min, max) over the corpus — ONE aggregation with
     2×dim partial-aggregated expressions (fixed-size result, map-side
     combined; no explode, no per-dim shuffle). The training artifact of
     scalar quantization, cached per session."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SQ_CACHE:
-        return _SQ_CACHE[key]
-    e = load_table(spark, sf_dir, "embeddings").select(_dvec("embedding").alias("vec"))
-    aggs = [F.min(F.element_at("vec", i + 1)).alias(f"mn{i}") for i in range(DIM)]
-    aggs += [F.max(F.element_at("vec", i + 1)).alias(f"mx{i}") for i in range(DIM)]
-    row = e.agg(*aggs).first()
-    mins = [float(row[f"mn{i}"]) for i in range(DIM)]
-    maxs = [float(row[f"mx{i}"]) for i in range(DIM)]
-    _SQ_CACHE[key] = (mins, maxs)
-    return mins, maxs
+
+    def build() -> tuple[list[float], list[float]]:
+        e = load_table(spark, sf_dir, "embeddings").select(_dvec("embedding").alias("vec"))
+        aggs = [F.min(F.element_at("vec", i + 1)).alias(f"mn{i}") for i in range(DIM)]
+        aggs += [F.max(F.element_at("vec", i + 1)).alias(f"mx{i}") for i in range(DIM)]
+        row = e.agg(*aggs).first()
+        mins = [float(row[f"mn{i}"]) for i in range(DIM)]
+        return mins, [float(row[f"mx{i}"]) for i in range(DIM)]
+
+    return memo(spark, sf_dir, "sq_stats", (), build)
 
 
 def _sq_scales(mins: list[float], maxs: list[float]) -> list[float]:

@@ -34,16 +34,14 @@ Operators:
 
 from __future__ import annotations
 
-import atexit
 import math
-import shutil
-import tempfile
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from labs_stream_processing_examples_scala_spark.session import memo, memo_dir
 from labs_stream_processing_examples_scala_spark.sources.batch import load_table
 
 DIM = 64
@@ -240,13 +238,6 @@ def cosine_neardup_pairs(
 N_TABLES = 8
 BITS_PER_TABLE = 6
 
-# one cached signature table per (session, sf_dir, n_tables, bits) —
-# both sides of the bucket join (corpus and query) read the same
-# materialization, so the Arrow-batched signature UDF runs exactly once
-# per corpus (same pattern as dedup.shingle_hash_arrays). At 100 TB this
-# is the precomputed index table you'd write partitioned by bucket.
-_SIG_CACHE: dict[tuple[str, str, int, int], DataFrame] = {}
-
 
 def _plane_component(table: int, bit: int, j: int) -> float:
     """Deterministic pseudo-random hyperplane component in [-0.5, 0.5):
@@ -307,17 +298,20 @@ def lsh_buckets(
 def _signed_vectors(
     spark: SparkSession, sf_dir: str, n_tables: int, bits: int
 ) -> DataFrame:
-    """(vec_id, vec, sigs: array<long>) — persisted so every consumer
-    (bucket explode, query-side lookup) reads the one materialized
-    signature pass instead of re-running the UDF per plan branch."""
-    key = (spark.sparkContext.applicationId, sf_dir, n_tables, bits)
-    if key in _SIG_CACHE:
-        return _SIG_CACHE[key]
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dvec("embedding").alias("vec"))
-    sig = _make_signature_udf(n_tables, bits)
-    out = e.withColumn("sigs", sig("vec")).persist()
-    _SIG_CACHE[key] = out
-    return out
+    """(vec_id, vec, sigs: array<long>) — persisted once per (session,
+    sf_dir, n_tables, bits) so every consumer (bucket explode, query-side
+    lookup) reads the one materialized signature pass instead of
+    re-running the UDF per plan branch (same pattern as
+    dedup.shingle_hash_arrays). At 100 TB this is the precomputed index
+    table you'd write partitioned by bucket."""
+
+    def build() -> DataFrame:
+        e = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", _dvec("embedding").alias("vec")
+        )
+        return e.withColumn("sigs", _make_signature_udf(n_tables, bits)("vec")).persist()
+
+    return memo(spark, sf_dir, "lsh_signatures", (n_tables, bits), build)
 
 
 def _probe_buckets(
@@ -564,23 +558,6 @@ def _seed_centroids(
     return [(int(r.vec_id), [float(x) for x in r.vec]) for r in seeds]
 
 
-# one materialized inverted file per (session, sf_dir, centroid set) —
-# written ONCE partitioned by cell (the on-disk index a 100 TB deployment
-# would keep as a table); probes read only their nprobe partitions, which
-# the scan proves via PartitionFilters. Temp dirs are removed at exit.
-_IVF_INDEX_CACHE: dict[tuple, str] = {}
-_IVF_TMP_ROOTS: list[str] = []
-_KMEANS_CACHE: dict[tuple, tuple[list[list[float]], int]] = {}
-
-
-def _cleanup_ivf_tmp() -> None:
-    for p in _IVF_TMP_ROOTS:
-        shutil.rmtree(p, ignore_errors=True)
-
-
-atexit.register(_cleanup_ivf_tmp)
-
-
 def build_ivf_index(
     spark: SparkSession,
     sf_dir: str,
@@ -589,20 +566,20 @@ def build_ivf_index(
 ) -> str:
     """Materialize the inverted file: one zero-exchange assignment pass
     over the embeddings, written as parquet partitioned by ``cell``
-    (sources/layout.py's partitioned-write layout). Returns the path.
-    Cached per (session, sf_dir, tag) so repeated probes reuse it."""
+    (sources/layout.py's partitioned-write layout) — the on-disk index a
+    100 TB deployment would keep as a table; probes read only their
+    nprobe partitions, which the scan proves via PartitionFilters.
+    Returns the path. Built once per (session, sf_dir, tag) in a
+    session temp dir so repeated probes reuse it."""
     from labs_stream_processing_examples_scala_spark.sources.layout import write_partitioned
 
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    if key in _IVF_INDEX_CACHE:
-        return _IVF_INDEX_CACHE[key]
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dvec("embedding").alias("vec"))
-    assigned = e.withColumn("cell", _assign_cell(cents_py))
-    path = tempfile.mkdtemp(prefix=f"ivf_index_{tag}_")
-    _IVF_TMP_ROOTS.append(path)
-    write_partitioned(assigned, path, "cell")
-    _IVF_INDEX_CACHE[key] = path
-    return path
+    def build(path: str) -> None:
+        e = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", _dvec("embedding").alias("vec")
+        )
+        write_partitioned(e.withColumn("cell", _assign_cell(cents_py)), path, "cell")
+
+    return memo_dir(spark, sf_dir, "ivf_index", (tag,), build)
 
 
 def _probe_cells_py(
@@ -796,54 +773,27 @@ def _make_probe_expansion_udf(n_tables: int, bits: int, n_probes: int):
     return probe_expand
 
 
-# probe-expanded signature cache: same contract as _SIG_CACHE, keyed
-# with n_probes — ONE Arrow expansion pass per corpus serves both join
-# sides (the base side is the pos % n_probes == 0 slice of the same
-# materialization).
-_PROBE_CACHE: dict[tuple[str, str, int, int, int], DataFrame] = {}
-_PROBE_CACHE_MAX = 4  # round-9 ADVICE: each entry persists the full
-# 64-double vectors + expanded bucket arrays; a long session sweeping
-# corpora/params must not accumulate unbounded executor storage
-
-
-def _cache_put_bounded(cache: dict, key, df: DataFrame, max_entries: int) -> None:
-    """Insert with LRU eviction: dicts iterate in insertion order and
-    HIT paths refresh via :func:`_cache_get_refresh`, so the first key
-    is the least recently used; evicted entries are unpersisted so the
-    executor storage is actually released (complements the explicit
-    dedup.invalidate_cache sweep)."""
-    while len(cache) >= max_entries:
-        oldest = next(iter(cache))
-        cache.pop(oldest).unpersist()
-    cache[key] = df
-
-
-def _cache_get_refresh(cache: dict, key):
-    """LRU hit: pop + re-insert so insertion order stays eviction
-    order — the invariant _cache_put_bounded's eviction depends on,
-    previously hand-copied at every hit site (round-12 self-review).
-    Returns the entry or None."""
-    if key not in cache:
-        return None
-    df = cache.pop(key)
-    cache[key] = df
-    return df
-
-
 def _probe_expanded(
     spark: SparkSession, sf_dir: str, n_tables: int, bits: int, n_probes: int
 ) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, n_tables, bits, n_probes)
-    hit = _cache_get_refresh(_PROBE_CACHE, key)
-    if hit is not None:
-        return hit
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _dvec("embedding").alias("vec")
+    """Probe-expanded signatures, persisted like the plain signatures
+    and keyed with n_probes — ONE Arrow expansion pass per corpus serves
+    both join sides (the base side is the pos % n_probes == 0 slice of
+    the same materialization). Bounded (round-9 ADVICE): each entry
+    persists the full 64-double vectors + expanded bucket arrays, so a
+    long session sweeping corpora/params must not accumulate unbounded
+    executor storage."""
+
+    def build() -> DataFrame:
+        e = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", _dvec("embedding").alias("vec")
+        )
+        expand = _make_probe_expansion_udf(n_tables, bits, n_probes)
+        return e.withColumn("pbs", expand("vec")).persist()
+
+    return memo(
+        spark, sf_dir, "probe_expanded", (n_tables, bits, n_probes), build, bounded=True
     )
-    expand = _make_probe_expansion_udf(n_tables, bits, n_probes)
-    out = e.withColumn("pbs", expand("vec")).persist()
-    _cache_put_bounded(_PROBE_CACHE, key, out, _PROBE_CACHE_MAX)
-    return out
 
 
 def lsh_neardup_pairs(
@@ -1045,12 +995,14 @@ def kmeans_train(
     params) — repeated probes reuse the trained quantizer, as a real
     deployment would.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, n_cells, n_iter, tol)
-    if key in _KMEANS_CACHE:
-        return _KMEANS_CACHE[key]
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dvec("embedding").alias("vec"))
-    _KMEANS_CACHE[key] = kmeans_train_frame(e, n_cells=n_cells, n_iter=n_iter, tol=tol)
-    return _KMEANS_CACHE[key]
+
+    def build() -> tuple[list[list[float]], int]:
+        e = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", _dvec("embedding").alias("vec")
+        )
+        return kmeans_train_frame(e, n_cells=n_cells, n_iter=n_iter, tol=tol)
+
+    return memo(spark, sf_dir, "kmeans", (n_cells, n_iter, tol), build)
 
 
 def kmeans_train_frame(

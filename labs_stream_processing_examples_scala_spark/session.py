@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, and the session-cache
+registry every operator memoizes its per-session artifacts through.
 
 Local testing runs on a single JVM (local[N]); the configs below are the
 ones that matter for correctness (UTC timestamps vs the DuckDB oracle,
@@ -9,9 +10,13 @@ used with a different master and shuffle-partition count.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+from typing import NamedTuple
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -61,13 +66,102 @@ def get_spark(
     return spark
 
 
+# --- session-cache registry ---------------------------------------------
+#
+# Every operator artifact that is built once per (session, sf_dir,
+# params) — persisted frames, trained models, on-disk indexes and
+# tables — lives here, so building, bounding, releasing and
+# invalidating a session cache is decided in one place.
+
+#: LRU size of a ``bounded=True`` entry name (frames that persist a
+#: full corpus copy per parameter set: a sweep must evict, not pile up)
+BOUNDED_ENTRIES = 4
+
+_ENTRIES: dict[str, dict[tuple, object]] = {}
+_COUNTS: dict[str, list[int]] = {}  # name -> [hits, misses]
+_TMP_DIRS: list[str] = []
+
+
+class CacheInfo(NamedTuple):
+    keys: list[tuple]  # (applicationId, sf_dir, *params), LRU order
+    hits: int
+    misses: int
+
+
+def _release(value) -> None:
+    for v in value if isinstance(value, tuple) else (value,):
+        if isinstance(v, DataFrame):
+            v.unpersist()
+
+
+def memo(
+    spark: SparkSession, sf_dir: str, name: str, params: tuple, build, bounded: bool = False
+):
+    """``build()``'s value, built once per (session, sf_dir, name,
+    *params). A DataFrame value (or each DataFrame in a tuple value) is
+    unpersisted when its entry is evicted or invalidated. ``bounded``
+    keeps at most :data:`BOUNDED_ENTRIES` entries under ``name``,
+    evicting the least recently used."""
+    key = (spark.sparkContext.applicationId, sf_dir, *params)
+    entries = _ENTRIES.setdefault(name, {})
+    counts = _COUNTS.setdefault(name, [0, 0])
+    if key in entries:
+        counts[0] += 1
+        entries[key] = entries.pop(key)  # most recently used goes last
+        return entries[key]
+    counts[1] += 1
+    value = build()
+    if bounded:
+        while len(entries) >= BOUNDED_ENTRIES:
+            _release(entries.pop(next(iter(entries))))
+    entries[key] = value
+    return value
+
+
+def memo_dir(spark: SparkSession, sf_dir: str, prefix: str, params: tuple, build) -> str:
+    """A fresh temp dir filled by ``build(path)``, built once per
+    (session, sf_dir, prefix, *params); returns the path. The dir is
+    removed at interpreter exit — not on invalidation, because frames
+    already handed out may still read it."""
+
+    def make() -> str:
+        path = tempfile.mkdtemp(prefix=f"{prefix}_")
+        _TMP_DIRS.append(path)
+        build(path)
+        return path
+
+    return memo(spark, sf_dir, prefix, params, make)
+
+
+def invalidate(sf_dir: str | None = None) -> None:
+    """Drop (and unpersist) every session-cache entry, or only those
+    built from ``sf_dir``. Call when the parquet under a cached dir
+    changes: entries otherwise serve the old rows for the session's
+    lifetime."""
+    for entries in _ENTRIES.values():
+        for key in [k for k in entries if sf_dir is None or k[1] == sf_dir]:
+            _release(entries.pop(key))
+
+
+def cache_info(name: str) -> CacheInfo:
+    """The live entry keys of ``name`` and its hit/miss counts so far."""
+    hits, misses = _COUNTS.get(name, (0, 0))
+    return CacheInfo(list(_ENTRIES.get(name, ())), hits, misses)
+
+
+@atexit.register
+def _remove_tmp_dirs() -> None:
+    for path in _TMP_DIRS:
+        shutil.rmtree(path, ignore_errors=True)
+
+
 def release_persisted_rdds(spark: SparkSession) -> int:
     """Unpersist every RDD the context still holds and return how many
-    were released. The managed operator caches (dedup/similarity) are
-    dropped by ``dedup.invalidate_cache()``; what remains afterwards is
-    localCheckpoint generations (e.g. the two-star component loop),
-    whose storage otherwise lives until context shutdown. Call at
-    suite/bench teardown so nothing persisted outlives the run."""
+    were released. The session caches are dropped by
+    :func:`invalidate`; what remains afterwards is localCheckpoint
+    generations (e.g. the two-star component loop), whose storage
+    otherwise lives until context shutdown. Call at suite/bench
+    teardown so nothing persisted outlives the run."""
     scala_sc = spark.sparkContext._jsc.sc()
     it = scala_sc.getPersistentRDDs().iterator()
     n = 0

@@ -44,6 +44,8 @@ from pyspark.sql import functions as F
 
 from labs_stream_processing_examples_scala_spark.operators import cow_table as CT
 from labs_stream_processing_examples_scala_spark.operators import merge as MG
+from labs_stream_processing_examples_scala_spark.session import memo_dir
+from labs_stream_processing_examples_scala_spark.streaming.bounded import drive_bounded
 
 LAST_BATCH_KEY = "cdc_last_batch_id"
 
@@ -192,55 +194,20 @@ def run_cdc_ingest(
     files (one micro-batch per ``files_per_trigger`` files) and return
     the sink for reading/restarting. ``sink_cls`` picks the write tier
     (CdcMergeSink = copy-on-write rewrite, MorCdcSink = deletion-vector
-    merge-on-read)."""
-    schema = spark.read.parquet(cdc_source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(cdc_source_dir)
-    )
+    merge-on-read). The checkpoint lives at ``target_path + ".ckpt"``.
+    A timeout with batches still pending raises TimeoutError: a
+    half-merged target must not be returned as success."""
     sink = sink_cls(
         target_path, key, versioned_col, partition_col, change_date_fn=change_date_fn
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", target_path + ".ckpt")
-        .foreachBatch(sink.process_batch)
-        .trigger(availableNow=True)
-        .start()
+    drive_bounded(
+        spark, cdc_source_dir, None, sink.process_batch, target_path + ".ckpt",
+        files_per_trigger=files_per_trigger, timeout=timeout, label="cdc ingest",
     )
-    finished = q.awaitTermination(timeout)
-    if q.isActive:
-        q.stop()
-    if q.exception() is not None:
-        raise RuntimeError(f"cdc ingest failed: {q.exception()}")
-    if not finished:
-        # the drive_bounded contract, which this block never inherited
-        # (round-12 self-review): a timeout with CDC batches still
-        # pending must NOT return the half-merged target as success —
-        # _cdc_stream would memoize the sink and serve a partial SCD2
-        # table for the rest of the session
-        raise TimeoutError(
-            f"cdc ingest timed out after {timeout}s with batches pending"
-        )
     return sink
 
 
-_CDC_WORKDIRS: dict[tuple, tuple[str, CdcMergeSink]] = {}
-_CDC_TMP: list[str] = []
 _BATCH_DATES = ("1997-06-01", "1998-06-01", "1999-06-01")
-
-
-def _cleanup_cdc_tmp() -> None:
-    import shutil
-
-    for p in _CDC_TMP:
-        shutil.rmtree(p, ignore_errors=True)
-
-
-import atexit  # noqa: E402  (registration point, keeps the hook local)
-
-atexit.register(_cleanup_cdc_tmp)
 
 
 def cdc_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -277,21 +244,20 @@ def cdc_stream_scd2_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cdc_stream(spark: SparkSession, sf_dir: str, tier: str) -> DataFrame:
-    import tempfile
-
     from labs_stream_processing_examples_scala_spark.sources.batch import load_table
 
-    key = (spark.sparkContext.applicationId, sf_dir, f"cdc_scd2_{tier}")
-    if key not in _CDC_WORKDIRS:
-        work = tempfile.mkdtemp(prefix="cdc_ingest_")
-        _CDC_TMP.append(work)
+    sink_cls = MorCdcSink if tier == "mor" else CdcMergeSink
+    cols = ("c_custkey", "c_acctbal", "c_mktsegment")
+
+    def build(work: str) -> None:
         src = os.path.join(work, "src")
-        target = os.path.join(work, "target")
         os.makedirs(src)
         cust = load_table(spark, sf_dir, "customer").select(
             "c_custkey", "c_name", "c_mktsegment", "c_acctbal"
         )
-        MG.scd2_init(cust).write.partitionBy("c_mktsegment").parquet(target)
+        MG.scd2_init(cust).write.partitionBy("c_mktsegment").parquet(
+            os.path.join(work, "target")
+        )
         orders = load_table(spark, sf_dir, "orders")
         upd = (
             orders.filter(F.col("o_orderdate") >= F.lit(MG.CHANGE_DATE).cast("timestamp"))
@@ -314,14 +280,13 @@ def _cdc_stream(spark: SparkSession, sf_dir: str, tier: str) -> DataFrame:
             write_cdc_batch_file(
                 feed.filter(F.pmod("c_custkey", F.lit(3)) == i), src, i
             )
-        sink = run_cdc_ingest(
-            spark, src, target, "c_custkey", "c_acctbal", "c_mktsegment",
-            change_date_fn=lambda b: _BATCH_DATES[b],
-            sink_cls=MorCdcSink if tier == "mor" else CdcMergeSink,
+        run_cdc_ingest(
+            spark, src, os.path.join(work, "target"), *cols,
+            change_date_fn=lambda b: _BATCH_DATES[b], sink_cls=sink_cls,
         )
-        _CDC_WORKDIRS[key] = (work, sink)
-    work, sink = _CDC_WORKDIRS[key]
-    return sink.view(spark).select(
+
+    work = memo_dir(spark, sf_dir, "cdc_ingest", (tier,), build)
+    return sink_cls(os.path.join(work, "target"), *cols).view(spark).select(
         "c_custkey",
         "c_name",
         F.round("c_acctbal", 6).alias("acctbal"),

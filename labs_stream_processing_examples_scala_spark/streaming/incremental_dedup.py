@@ -29,9 +29,7 @@ RocksDB. The stream itself stays stateless.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +39,8 @@ from labs_stream_processing_examples_scala_spark.operators.dedup import (
     minhash_of,
     shingle_arrays_of,
 )
+from labs_stream_processing_examples_scala_spark.session import memo_dir
+from labs_stream_processing_examples_scala_spark.streaming.bounded import drive_bounded, write_splits
 from labs_stream_processing_examples_scala_spark.streaming.sinks import idempotent_write
 
 _ARR_SCHEMA = "doc_id long, shs array<bigint>, sz int"
@@ -98,7 +98,7 @@ class IncrementalLshDedup:
         # persist the banded frame too: it feeds BOTH sides of the
         # in-batch self-join, the new-vs-index join, and the bucket
         # write — unpersisted, the 16-perm MinHash fold re-executed
-        # ~4x per micro-batch (the exact pitfall dedup._BANDED_CACHE
+        # ~4x per micro-batch (the exact pitfall dedup.lsh_rep_frames
         # documents for the batch path; r11 review)
         new_buckets = banded_of(minhash_of(new_arrs)).persist()
         try:
@@ -199,11 +199,10 @@ def run_incremental(
     """Drive a bounded incremental run over a directory of document
     parquet files (one micro-batch per ``files_per_trigger`` files) and
     return the processor for result inspection."""
-    from labs_stream_processing_examples_scala_spark.streaming.bounded import drive_bounded
-
     proc = IncrementalLshDedup(workdir, threshold=threshold, compact_every=compact_every)
     drive_bounded(
-        spark, docs_source_dir, ["doc_id", "text"], proc.process_batch, workdir,
+        spark, docs_source_dir, ["doc_id", "text"], proc.process_batch,
+        os.path.join(workdir, "ckpt"),
         files_per_trigger=files_per_trigger, timeout=timeout,
         label="incremental dedup",
     )
@@ -224,32 +223,13 @@ def incremental_lsh_pairs(
     one index instead of building a new one each call, and removed at
     interpreter exit (the returned DataFrame reads from it lazily, so
     it must outlive the call)."""
-    import tempfile
-
     from labs_stream_processing_examples_scala_spark.sources.batch import load_table
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_splits, threshold)
-    if key in _INCR_WORKDIRS:
-        return IncrementalLshDedup(_INCR_WORKDIRS[key], threshold=threshold).pairs(spark)
+    def build(work: str) -> None:
+        src = os.path.join(work, "src")
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        write_splits(docs, "doc_id", n_splits, src)
+        run_incremental(spark, src, work, threshold=threshold)
 
-    work = tempfile.mkdtemp(prefix="incr_dedup_")
-    _INCR_TMP.append(work)
-    src = os.path.join(work, "src")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # deterministic split by doc_id so batch composition is stable
-    docs.withColumn("split", F.pmod(F.col("doc_id"), F.lit(n_splits))).repartitionByRange(
-        n_splits, "split"
-    ).drop("split").write.mode("overwrite").parquet(src)
-    proc = run_incremental(spark, src, work, threshold=threshold)
-    _INCR_WORKDIRS[key] = work
-    return proc.pairs(spark)
-
-
-_INCR_WORKDIRS: dict[tuple, str] = {}
-_INCR_TMP: list[str] = []
-
-
-@atexit.register
-def _cleanup_incr_tmp() -> None:
-    for p in _INCR_TMP:
-        shutil.rmtree(p, ignore_errors=True)
+    work = memo_dir(spark, sf_dir, "incr_dedup", (n_splits, threshold), build)
+    return IncrementalLshDedup(work, threshold=threshold).pairs(spark)

@@ -53,6 +53,7 @@ from labs_stream_processing_examples_scala_spark.operators.dedup import (
     minhash_of,
     shingle_arrays_of,
 )
+from labs_stream_processing_examples_scala_spark.streaming.bounded import drive_bounded
 from labs_stream_processing_examples_scala_spark.streaming.incremental_dedup import (
     _ARR_SCHEMA,
     _BUCKET_SCHEMA,
@@ -306,25 +307,14 @@ def run_ingest(
     files_per_trigger: int = 1,
     timeout: float = 600.0,
 ) -> StreamingIngestPipeline:
-    schema = spark.read.parquet(docs_source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(docs_source_dir)
-    )
+    """Drive a bounded ingest over a directory of document parquet files
+    and return the pipeline for reading. Raises TimeoutError if batches
+    are still pending at ``timeout``."""
     proc = StreamingIngestPipeline(
         workdir, bench_shingles=bench_shingles, quality_min=quality_min, threshold=threshold
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .foreachBatch(proc.process_batch)
-        .trigger(availableNow=True)
-        .start()
+    drive_bounded(
+        spark, docs_source_dir, None, proc.process_batch, os.path.join(workdir, "ckpt"),
+        files_per_trigger=files_per_trigger, timeout=timeout, label="ingest pipeline",
     )
-    q.awaitTermination(timeout)
-    if q.isActive:
-        q.stop()
-    if q.exception() is not None:
-        raise RuntimeError(f"ingest pipeline failed: {q.exception()}")
     return proc

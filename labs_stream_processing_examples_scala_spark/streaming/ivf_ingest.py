@@ -43,11 +43,9 @@ stays stateless.
 
 from __future__ import annotations
 
-import atexit
 import json
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,6 +58,8 @@ from labs_stream_processing_examples_scala_spark.operators.similarity import (
     _query_embedding,
     _seed_centroids,
 )
+from labs_stream_processing_examples_scala_spark.session import memo_dir
+from labs_stream_processing_examples_scala_spark.streaming.bounded import drive_bounded, write_splits
 
 _INDEX_SCHEMA = "vec_id long, vec array<double>, cell int"
 _META = "ivf_meta.json"
@@ -276,26 +276,14 @@ def run_ivf_ingest(
     """Drive a bounded ingest over a directory of embedding parquet
     files (one micro-batch per ``files_per_trigger`` files) and return
     the index for probing."""
-    from labs_stream_processing_examples_scala_spark.streaming.bounded import drive_bounded
-
     proc = IncrementalIvfIndex(workdir, cents_py, compact_every=compact_every)
     drive_bounded(
         spark, embeddings_source_dir, ["vec_id", "embedding"],
-        proc.process_batch, workdir,
+        proc.process_batch, os.path.join(workdir, "ckpt"),
         files_per_trigger=files_per_trigger, timeout=timeout,
         label="ivf ingest",
     )
     return proc
-
-
-_INGEST_WORKDIRS: dict[tuple, str] = {}
-_INGEST_TMP: list[str] = []
-
-
-@atexit.register
-def _cleanup_ingest_tmp() -> None:
-    for p in _INGEST_TMP:
-        shutil.rmtree(p, ignore_errors=True)
 
 
 def ivf_incremental_topk(
@@ -314,26 +302,19 @@ def ivf_incremental_topk(
     the same scoring — IDENTICAL to the batch ``ivf_topk`` result;
     the local gate pins that as a recall-1.0 floor and the pytest as
     frame equality."""
-    key = (spark.sparkContext.applicationId, sf_dir, n_cells, n_splits)
-    if key in _INGEST_WORKDIRS:
-        # manifest exists: the constructor ignores centroids, so don't
-        # pay the _seed_centroids Spark job per cached probe (r11 review)
-        proc = IncrementalIvfIndex(_INGEST_WORKDIRS[key])
-        return proc.probe(spark, _query_embedding(spark, sf_dir, query_id), query_id, k, nprobe)
-
     from labs_stream_processing_examples_scala_spark.sources.batch import load_table
 
-    work = tempfile.mkdtemp(prefix="ivf_ingest_")
-    _INGEST_TMP.append(work)
-    src = os.path.join(work, "src")
-    embs = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # deterministic split by vec_id so batch composition is stable
-    embs.withColumn("split", F.pmod(F.col("vec_id"), F.lit(n_splits))).repartitionByRange(
-        n_splits, "split"
-    ).drop("split").write.mode("overwrite").parquet(src)
-    cents = _seed_centroids(spark, sf_dir, n_cells)
-    proc = run_ivf_ingest(spark, src, work, cents, compact_every=2)
-    _INGEST_WORKDIRS[key] = work
+    def build(work: str) -> None:
+        src = os.path.join(work, "src")
+        embs = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        write_splits(embs, "vec_id", n_splits, src)
+        cents = _seed_centroids(spark, sf_dir, n_cells)
+        run_ivf_ingest(spark, src, work, cents, compact_every=2)
+
+    work = memo_dir(spark, sf_dir, "ivf_ingest", (n_cells, n_splits), build)
+    # the manifest exists: the constructor ignores centroids, so a
+    # cached probe pays no _seed_centroids Spark job (r11 review)
+    proc = IncrementalIvfIndex(work)
     return proc.probe(spark, _query_embedding(spark, sf_dir, query_id), query_id, k, nprobe)
 
 

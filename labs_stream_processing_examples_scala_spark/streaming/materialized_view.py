@@ -41,6 +41,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from labs_stream_processing_examples_scala_spark.session import memo_dir
+from labs_stream_processing_examples_scala_spark.streaming.bounded import drive_bounded, write_splits
 from labs_stream_processing_examples_scala_spark.streaming.compaction import (
     compact_batched_dir,
     read_batched_dir,
@@ -132,13 +134,12 @@ def run_incremental_view(
     """Drive a bounded incremental run over a directory of parquet
     files (one micro-batch per ``files_per_trigger`` files) and return
     the processor for view inspection."""
-    from labs_stream_processing_examples_scala_spark.streaming.bounded import drive_bounded
-
     proc = IncrementalAggView(
         workdir, key_cols, key_schema, value_col, compact_every=compact_every
     )
     drive_bounded(
-        spark, source_dir, [*key_cols, value_col], proc.process_batch, workdir,
+        spark, source_dir, [*key_cols, value_col], proc.process_batch,
+        os.path.join(workdir, "ckpt"),
         files_per_trigger=files_per_trigger, timeout=timeout,
         label="incremental view",
     )
@@ -147,31 +148,27 @@ def run_incremental_view(
 
 # --- registry form ----------------------------------------------------
 
-_MV_WORKDIRS: dict[tuple, str] = {}
-_MV_TMP: list[str] = []
+def _mv_entry_view(
+    spark, sf_dir, name, n_splits, table, split_col, select_cols, make_proc, label
+) -> DataFrame:
+    """Shared registry-entry drive — ``table``'s ``split_col`` and
+    ``select_cols`` split ``n_splits`` ways into a session temp
+    workdir, driven bounded through ``make_proc(workdir)`` once per
+    (session, sf_dir, n_splits), and served as that processor's view
+    (round-12 self-review: the three MV entries carried near-identical
+    copies of this block)."""
+    from labs_stream_processing_examples_scala_spark.sources.batch import load_table
 
+    def build(work: str) -> None:
+        src = os.path.join(work, "src")
+        frame = load_table(spark, sf_dir, table).select(split_col, *select_cols)
+        write_splits(frame, split_col, n_splits, src)
+        proc = make_proc(work)
+        drive_bounded(
+            spark, src, select_cols, proc.process_batch, os.path.join(work, "ckpt"), label=label
+        )
 
-def _drive_mv_entry(spark, key, prefix, frame, split_col, select_cols, make_proc, label):
-    """Shared registry-entry drive — memoized temp workdir, pmod split
-    write, bounded drive (round-12 self-review: the three MV entries
-    carried near-identical copies of this block, so a change to the
-    drive shape had to be applied three times). ``make_proc`` builds
-    the processor from the workdir; ``key[2]`` is n_splits."""
-    import tempfile
-
-    from labs_stream_processing_examples_scala_spark.streaming.bounded import drive_bounded
-
-    work = tempfile.mkdtemp(prefix=prefix)
-    _MV_TMP.append(work)
-    src = os.path.join(work, "src")
-    n_splits = key[2]
-    frame.withColumn("split", F.pmod(F.col(split_col), F.lit(n_splits))).repartitionByRange(
-        n_splits, "split"
-    ).drop("split").write.mode("overwrite").parquet(src)
-    proc = make_proc(work)
-    drive_bounded(spark, src, select_cols, proc.process_batch, work, label=label)
-    _MV_WORKDIRS[key] = work
-    return proc
+    return make_proc(memo_dir(spark, sf_dir, name, (n_splits,), build)).view(spark)
 
 
 def incremental_event_stats(
@@ -188,23 +185,13 @@ def incremental_event_stats(
 
     Temp-workdir lifecycle mirrors incremental_lsh_pairs: memoized per
     (session, params), removed at interpreter exit."""
-    from labs_stream_processing_examples_scala_spark.sources.batch import load_table
-
-    key = (spark.sparkContext.applicationId, sf_dir, n_splits)
-    if key in _MV_WORKDIRS:
-        return IncrementalAggView(
-            _MV_WORKDIRS[key], ["event_type"], "event_type string", "value"
-        ).view(spark)
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    proc = _drive_mv_entry(
-        spark, key, "incr_mv_", ev, "event_id", ["event_type", "value"],
+    return _mv_entry_view(
+        spark, sf_dir, "incr_mv", n_splits, "events", "event_id", ["event_type", "value"],
         lambda w: IncrementalAggView(
             w, ["event_type"], "event_type string", "value", compact_every=2
         ),
         label="incremental view",
     )
-    return proc.view(spark)
 
 
 def event_stats_oracle_sql() -> str:
@@ -219,16 +206,6 @@ def event_stats_oracle_sql() -> str:
         FROM events
     GROUP BY event_type
     """
-
-
-import atexit
-import shutil
-
-
-@atexit.register
-def _cleanup_mv_tmp() -> None:
-    for p in _MV_TMP:
-        shutil.rmtree(p, ignore_errors=True)
 
 
 # --- sketch-partial variant: streaming distinct-count view ------------
@@ -277,23 +254,13 @@ def incremental_distinct_users(
     compaction that fires at batch 3 (4 splits for the same reason as
     incremental_event_stats). Rows-only (sketch internals are engine-specific);
     tolerance vs exact distinct in tests/test_materialized_view.py."""
-    from labs_stream_processing_examples_scala_spark.sources.batch import load_table
-
-    key = (spark.sparkContext.applicationId, sf_dir, n_splits, "distinct")
-    if key in _MV_WORKDIRS:
-        return IncrementalDistinctView(
-            _MV_WORKDIRS[key], ["event_type"], "event_type string", "user_id"
-        ).view(spark)
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "user_id")
-    proc = _drive_mv_entry(
-        spark, key, "incr_mvd_", ev, "event_id", ["event_type", "user_id"],
+    return _mv_entry_view(
+        spark, sf_dir, "incr_mvd", n_splits, "events", "event_id", ["event_type", "user_id"],
         lambda w: IncrementalDistinctView(
             w, ["event_type"], "event_type string", "user_id", compact_every=2
         ),
         label="incremental distinct view",
     )
-    return proc.view(spark)
 
 
 # --- time travel ------------------------------------------------------
@@ -394,16 +361,8 @@ def incremental_heavy_tokens(
     summary-merging compaction). Rows-only (bounded-error estimates);
     the error-bound contract is pinned by
     tests/test_materialized_view.py."""
-    from labs_stream_processing_examples_scala_spark.sources.batch import load_table
-
-    key = (spark.sparkContext.applicationId, sf_dir, n_splits, "hh")
-    if key in _MV_WORKDIRS:
-        return IncrementalHeavyHittersView(_MV_WORKDIRS[key]).view(spark)
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    proc = _drive_mv_entry(
-        spark, key, "incr_mvh_", d, "doc_id", ["text"],
+    return _mv_entry_view(
+        spark, sf_dir, "incr_mvh", n_splits, "documents", "doc_id", ["text"],
         lambda w: IncrementalHeavyHittersView(w, compact_every=2),
         label="incremental heavy-hitters view",
     )
-    return proc.view(spark)

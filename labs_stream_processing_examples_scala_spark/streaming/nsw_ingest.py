@@ -34,8 +34,6 @@ a stream" (round-7 precedent: ivf_ingest).
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 import numpy as np
 import pandas as pd
@@ -54,6 +52,8 @@ from labs_stream_processing_examples_scala_spark.operators.graph_ann import (
     _select_entries,
     make_shard_builder,
 )
+from labs_stream_processing_examples_scala_spark.session import memo_dir
+from labs_stream_processing_examples_scala_spark.streaming.bounded import drive_bounded, write_splits
 from labs_stream_processing_examples_scala_spark.streaming.compaction import (
     compact_batched_dir,
     read_batched_dir,
@@ -234,28 +234,14 @@ def run_nsw_ingest(
     """Drive a bounded ingest over a directory of embedding parquet
     files (one micro-batch per ``files_per_trigger`` files) and return
     the index for probing."""
-    from labs_stream_processing_examples_scala_spark.streaming.bounded import drive_bounded
-
     proc = IncrementalNswIndex(workdir, n_shards=n_shards, compact_every=compact_every)
     drive_bounded(
         spark, embeddings_source_dir, ["vec_id", "embedding"],
-        proc.process_batch, workdir,
+        proc.process_batch, os.path.join(workdir, "ckpt"),
         files_per_trigger=files_per_trigger, timeout=timeout,
         label="nsw ingest",
     )
     return proc
-
-
-_NSW_WORKDIRS: dict[tuple, str] = {}
-_NSW_TMP: list[str] = []
-
-import atexit  # noqa: E402
-
-
-@atexit.register
-def _cleanup_nsw_tmp() -> None:
-    for p in _NSW_TMP:
-        shutil.rmtree(p, ignore_errors=True)
 
 
 def nsw_incremental_topk(
@@ -275,17 +261,11 @@ def nsw_incremental_topk(
     )
     from labs_stream_processing_examples_scala_spark.sources.batch import load_table
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_splits)
-    if key in _NSW_WORKDIRS:
-        proc = IncrementalNswIndex(_NSW_WORKDIRS[key])
-        return proc.probe(spark, _query_embedding(spark, sf_dir, query_id), query_id, k)
-    work = tempfile.mkdtemp(prefix="nsw_ingest_")
-    _NSW_TMP.append(work)
-    src = os.path.join(work, "src")
-    embs = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    embs.withColumn("split", F.pmod(F.col("vec_id"), F.lit(n_splits))).repartitionByRange(
-        n_splits, "split"
-    ).drop("split").write.mode("overwrite").parquet(src)
-    proc = run_nsw_ingest(spark, src, work)
-    _NSW_WORKDIRS[key] = work
+    def build(work: str) -> None:
+        src = os.path.join(work, "src")
+        embs = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        write_splits(embs, "vec_id", n_splits, src)
+        run_nsw_ingest(spark, src, work)
+
+    proc = IncrementalNswIndex(memo_dir(spark, sf_dir, "nsw_ingest", (n_splits,), build))
     return proc.probe(spark, _query_embedding(spark, sf_dir, query_id), query_id, k)

@@ -15,32 +15,15 @@ Guarantee mapping (README.md:11-20 → engine):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from labs_stream_processing_examples_scala_spark.plans.enrichment import enrichment_with_errors
+from labs_stream_processing_examples_scala_spark.streaming.bounded import (
+    _drop_aborted_first_offset,
+    await_bounded,
+)
 from labs_stream_processing_examples_scala_spark.streaming.sinks import main_and_dlq_sink, read_batched_output
-
-
-def _drop_aborted_first_offset(checkpoint_path: str) -> None:
-    """Remove the temp file of an offset-log write that never completed
-    when NO batch was ever logged. A query stopped while writing its
-    first offset entry leaves only ``offsets/.0.<uuid>.tmp``; Spark 4.1
-    then refuses every restart (STATE_STORE_CHECKPOINT_LOCATION_NOT_EMPTY:
-    a query starting at batch 0 needs an empty checkpoint), so the crash
-    could not be recovered. Nothing was logged, so nothing is lost."""
-    offsets = os.path.join(checkpoint_path, "offsets")
-    try:
-        names = os.listdir(offsets)
-    except FileNotFoundError:
-        return  # fresh checkpoint (or not a local path)
-    if any(n.isdigit() for n in names):
-        return
-    for n in names:
-        if n.startswith(".") and n.endswith((".tmp", ".tmp.crc")):
-            os.remove(os.path.join(offsets, n))
 
 
 class StreamingEnrichmentPipeline:
@@ -87,13 +70,9 @@ class StreamingEnrichmentPipeline:
         return writer.start()
 
     def run_bounded(self, messages: DataFrame, timeout: float = 120.0) -> None:
-        """Process everything available, then stop (for tests/batch-parity)."""
-        q = self.start(messages, trigger_once=True)
-        q.awaitTermination(timeout)
-        if q.isActive:
-            q.stop()
-        if q.exception() is not None:
-            raise RuntimeError(f"streaming query failed: {q.exception()}")
+        """Process everything available, then stop (for tests/batch-parity).
+        Raises TimeoutError if batches are still pending at ``timeout``."""
+        await_bounded(self.start(messages, trigger_once=True), timeout, "streaming query")
 
     def output(self, spark: SparkSession) -> DataFrame:
         return read_batched_output(spark, self.output_path)

@@ -128,10 +128,12 @@ def spark():
     yield s
     # teardown hygiene: drop the managed operator caches, then sweep
     # localCheckpoint leftovers, and fail loudly if storage remains
-    from labs_stream_processing_examples_scala_spark import release_persisted_rdds
-    from labs_stream_processing_examples_scala_spark.operators import dedup
+    from labs_stream_processing_examples_scala_spark.session import (
+        invalidate,
+        release_persisted_rdds,
+    )
 
-    dedup.invalidate_cache()
+    invalidate()
     release_persisted_rdds(s)
     leaked = [
         (i.id(), i.name())

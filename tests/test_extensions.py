@@ -7,11 +7,14 @@ brute force, approximation sanity, pandas-UDF plumbing determinism.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from labs_stream_processing_examples_scala_spark.multimodal import binary_documents, extract_features
 from labs_stream_processing_examples_scala_spark.operators import dedup as DD
 from labs_stream_processing_examples_scala_spark.operators import similarity as SIM
+from labs_stream_processing_examples_scala_spark.session import cache_info, invalidate
 from tests.conftest import SF_SMOKE
 
 
@@ -333,19 +336,31 @@ def test_shingle_edge_cases(spark):
     assert got[6] == 1  # 'x x x' twice, distinct → 1
     assert got[7] == 0  # 3 real words? 'padded spaces' = 2 words → 0
 
+def _cached_dirs(name: str) -> set[str]:
+    return {k[1] for k in cache_info(name).keys}
+
+
 def test_cache_invalidation_unpersists(spark):
-    """invalidate_cache drops + unpersists cached shingle arrays (and
-    cascades to the similarity signature cache) so a changed fixture
-    dir can't serve stale rows."""
+    """invalidate(sf_dir) drops + unpersists every session-cache entry
+    built from that dir — persisted frames (shingle arrays, signatures),
+    temp-dir entries (the IVF index) and plain Python values (trained
+    centroids) alike — so a changed fixture dir can't serve stale rows.
+    A dropped temp dir stays on disk for frames already handed out."""
     arrs = DD.shingle_hash_arrays(spark, SF_SMOKE)
-    assert any(k[1] == SF_SMOKE for k in DD._ARR_CACHE)
-    DD.invalidate_cache(SF_SMOKE)
-    assert not any(k[1] == SF_SMOKE for k in DD._ARR_CACHE)
-    assert not any(k[1] == SF_SMOKE for k in SIM._SIG_CACHE)
+    SIM.lsh_buckets(spark, SF_SMOKE)
+    index = SIM.build_ivf_index(spark, SF_SMOKE, SIM._seed_centroids(spark, SF_SMOKE, 4), "inv")
+    SIM.kmeans_train(spark, SF_SMOKE, n_cells=4, n_iter=1)
+    names = ("shingle_arrays", "lsh_signatures", "ivf_index", "kmeans")
+    assert all(SF_SMOKE in _cached_dirs(n) for n in names)
+    invalidate(SF_SMOKE)
+    assert not any(SF_SMOKE in _cached_dirs(n) for n in names)
     assert arrs.storageLevel.useMemory is False  # unpersisted
+    assert os.path.isdir(index)
     # rebuild works and re-caches
+    misses = cache_info("shingle_arrays").misses
     DD.shingle_hash_arrays(spark, SF_SMOKE)
-    assert any(k[1] == SF_SMOKE for k in DD._ARR_CACHE)
+    assert SF_SMOKE in _cached_dirs("shingle_arrays")
+    assert cache_info("shingle_arrays").misses == misses + 1
 
 def test_pack_sequences_partition_invariants(spark):
     """Every doc packed exactly once; within a (shard, seq) the docs are
@@ -830,7 +845,7 @@ def test_quadratic_baselines_guarded(spark, tmp_path):
     ).coalesce(1).write.parquet(str(hot / "documents.parquet"))
     with pytest.raises(DD.CandidateExplosionError, match="candidate"):
         DD.ngram_jaccard_pairs(spark, str(hot), max_candidate_pairs=1000)
-    DD.invalidate_cache(str(hot))
+    invalidate(str(hot))
 
     # fixture embeddings (2000 vecs at sf0.001? use smoke dir) over a tiny cap
     with pytest.raises(DD.CandidateExplosionError, match="pairs"):

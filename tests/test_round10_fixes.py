@@ -128,11 +128,14 @@ def test_materialize_explicit_path_not_cached_and_reused(spark, tmp_path):
     """ADVICE (low): a caller-supplied path must not enter the session
     cache (the caller owns and may delete it), and a second call with
     the same explicit path must return early instead of re-writing."""
+    from labs_stream_processing_examples_scala_spark.session import cache_info
+
     default_path = GA.materialize_nsw_index(spark, SF_SMOKE)
+    before = cache_info("nsw_index")
     mine = str(tmp_path / "my_index")
     p = GA.materialize_nsw_index(spark, SF_SMOKE, path=mine)
     assert p == mine
-    assert mine not in GA._NSW_INDEX_CACHE.values(), (
+    assert cache_info("nsw_index") == before, (
         "explicit path leaked into the session cache"
     )
     # registry default-path probes still resolve to the auto path

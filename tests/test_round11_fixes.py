@@ -191,12 +191,10 @@ def test_bench_warmup_populates_no_operator_caches(spark):
     session caches, making a --only slice's 'defended first run' warm.
     The neutral warm-up must leave every operator cache untouched."""
     import bench
-    from labs_stream_processing_examples_scala_spark.operators import dedup as D
-    from labs_stream_processing_examples_scala_spark.operators import graph_ann as GA
-    from labs_stream_processing_examples_scala_spark.operators import similarity as SIM
+    from labs_stream_processing_examples_scala_spark.session import cache_info
 
-    caches = (D._BANDED_CACHE, SIM._SIG_CACHE, SIM._PROBE_CACHE, GA._GRAPH_CACHE)
-    before = [set(c) for c in caches]
+    caches = ("lsh_banded", "lsh_signatures", "probe_expanded", "nsw_graph")
+    before = [cache_info(c) for c in caches]
     bench.warmup(spark, "/root/testdata/sf0.001")
-    after = [set(c) for c in caches]
+    after = [cache_info(c) for c in caches]
     assert before == after, "neutral warm-up must not touch operator caches"

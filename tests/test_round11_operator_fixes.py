@@ -101,8 +101,43 @@ def test_heavy_hitters_summary_cache_reuses_one_persist(spark):
     call and never unpersist — session-lifetime cache accumulation. The
     bounded session cache serves ONE frame per (session, sf_dir)."""
     from labs_stream_processing_examples_scala_spark.operators import frequency as FR
+    from labs_stream_processing_examples_scala_spark.session import cache_info
 
     FR.heavy_hitters(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
-    n1 = len(FR._SUMMARY_CACHE)
+    first = cache_info("mg_summaries")
     FR.heavy_hitters(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
-    assert len(FR._SUMMARY_CACHE) == n1, "second call must reuse the cached summary"
+    second = cache_info("mg_summaries")
+    assert second.keys == first.keys, "second call must reuse the cached summary"
+    assert (second.hits, second.misses) == (first.hits + 1, first.misses)
+
+
+def test_heavy_hitters_fresh_after_invalidate(spark, tmp_path):
+    """invalidate(dir) must drop EVERY session cache built from the dir.
+    The pass-1 summary was once missed: its persisted frame kept the old
+    candidates, Spark's cache manager served it to the rebuilt plan, and
+    heavy_hitters over rewritten documents returned []. The file is
+    written with pyarrow so no Spark write refreshes the path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from labs_stream_processing_examples_scala_spark.operators import frequency as FR
+    from labs_stream_processing_examples_scala_spark.session import invalidate
+
+    def write_docs(heavy: str, light: str) -> None:
+        texts = [f"{heavy} {heavy} {heavy}"] * 50 + [light] * 50
+        pq.write_table(
+            pa.table({"doc_id": pa.array(range(len(texts)), pa.int64()), "text": texts}),
+            str(tmp_path / "documents.parquet"),
+        )
+
+    def hitters() -> list[tuple]:
+        return sorted(tuple(r) for r in FR.heavy_hitters(spark, str(tmp_path)).collect())
+
+    write_docs("apple", "banana")
+    assert hitters() == [("apple", 150, 20), ("banana", 50, 20)]
+    write_docs("cherry", "date")
+    invalidate(str(tmp_path))
+    try:
+        assert hitters() == [("cherry", 150, 20), ("date", 50, 20)]
+    finally:
+        invalidate(str(tmp_path))

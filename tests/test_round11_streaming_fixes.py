@@ -52,9 +52,39 @@ def test_drive_bounded_timeout_raises(spark, tmp_path):
 
     with pytest.raises(TimeoutError, match="INCOMPLETE"):
         drive_bounded(
-            spark, src, ["k", "v"], slow_batch, str(tmp_path / "work"),
+            spark, src, ["k", "v"], slow_batch, str(tmp_path / "work" / "ckpt"),
             files_per_trigger=1, timeout=2.0, label="slow test run",
         )
+
+
+def test_run_ingest_timeout_raises(spark, tmp_path):
+    """run_ingest used to return its pipeline after a timed-out wait as
+    if the corpus were complete; it now shares drive_bounded's
+    wait-and-raise contract."""
+    from labs_stream_processing_examples_scala_spark.sources.batch import load_table
+    from labs_stream_processing_examples_scala_spark.streaming.ingest_pipeline import run_ingest
+
+    src = str(tmp_path / "src")
+    load_table(spark, SF_SMOKE, "documents").limit(20).coalesce(1).write.parquet(src)
+    with pytest.raises(TimeoutError, match="INCOMPLETE"):
+        run_ingest(spark, src, str(tmp_path / "work"), bench_shingles=[], timeout=0.01)
+
+
+def test_run_bounded_timeout_raises(spark, tmp_path):
+    """StreamingEnrichmentPipeline.run_bounded returned silently on a
+    timed-out wait; it now raises like every other bounded run."""
+    from labs_stream_processing_examples_scala_spark.streaming.pipeline import (
+        StreamingEnrichmentPipeline,
+    )
+    from labs_stream_processing_examples_scala_spark.streaming.sources import (
+        events_message_stream,
+    )
+
+    pipe = StreamingEnrichmentPipeline(
+        str(tmp_path / "out"), str(tmp_path / "dlq"), str(tmp_path / "ckpt")
+    )
+    with pytest.raises(TimeoutError, match="INCOMPLETE"):
+        pipe.run_bounded(events_message_stream(spark, SF_SMOKE), timeout=0.01)
 
 
 def test_ivfpq_probe_returns_k_without_rerank_source(spark, tmp_path):

@@ -116,9 +116,13 @@ def test_ivf_probe_equals_batch_topk_and_stays_pruned(spark):
     assert "Exchange" not in plan
     assert "PartitionFilters: [cell" in plan
     # and a second probe reuses the session-cached index build
-    key_count = len(SIM._IVF_INDEX_CACHE)
+    from labs_stream_processing_examples_scala_spark.session import cache_info
+
+    first = cache_info("ivf_index")
     SIM.ivf_probe_topk(spark, SF_SMOKE, query_id=2).collect()
-    assert len(SIM._IVF_INDEX_CACHE) == key_count
+    second = cache_info("ivf_index")
+    assert (second.keys, second.misses) == (first.keys, first.misses)
+    assert second.hits > first.hits
 
 
 # --- round-12 task #3: per-query all-cores probe for the sim family ------

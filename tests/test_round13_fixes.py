@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 import labs_stream_processing_examples_scala_spark.operators.cow_table as CT
 import labs_stream_processing_examples_scala_spark.operators.merge as MG
+from tests.conftest import SF_SMOKE
 
 
 # --- ADVICE 1: takedown int(v) silently truncated non-integral floats --
@@ -49,55 +50,64 @@ def test_takedown_rejects_nonintegral_float_id(spark, tmp_path):
     assert _SpyIndex.calls == 1 and out["table"]["deleted_rows"] > 0
 
 
-# --- ADVICE 2: _CODES_CACHE now LRU-bounded like its siblings ----------
+# --- ADVICE 2: the pq_encode cache is LRU-bounded like its siblings ----
+
+
+def _is_persisted(df) -> bool:
+    return df.storageLevel.useMemory or df.storageLevel.useDisk
 
 
 def test_codes_cache_is_lru_bounded(spark):
     """Repeated pq_encode with varying params used to pin one persisted
-    encoded corpus per param tuple until an explicit invalidate_cache
-    sweep (round-12 ADVICE). The cache now evicts-and-unpersists past
-    _CODES_CACHE_MAX, oldest first."""
-    from labs_stream_processing_examples_scala_spark.operators import (
-        quantization as qz,
+    encoded corpus per param tuple until an explicit invalidation sweep
+    (round-12 ADVICE). A bounded session-cache name evicts-and-
+    unpersists past BOUNDED_ENTRIES, least recently used first: a hit
+    refreshes an entry's recency."""
+    from labs_stream_processing_examples_scala_spark.session import (
+        BOUNDED_ENTRIES,
+        cache_info,
+        invalidate,
+        memo,
     )
-    from labs_stream_processing_examples_scala_spark.operators.similarity import (
-        _cache_put_bounded,
-    )
 
-    saved = dict(qz._CODES_CACHE)
-    qz._CODES_CACHE.clear()
+    sf = "/nonexistent/lru-test"
 
-    class _Dummy:
-        def __init__(self):
-            self.unpersisted = False
-
-        def unpersist(self):
-            self.unpersisted = True
+    def put(i):
+        build = lambda: spark.range(i + 1).persist()  # noqa: E731
+        return memo(spark, sf, "lru_test", (i,), build, bounded=True)
 
     try:
-        entries = [_Dummy() for _ in range(qz._CODES_CACHE_MAX + 2)]
-        for i, e in enumerate(entries):
-            _cache_put_bounded(qz._CODES_CACHE, ("app", "sf", i), e, qz._CODES_CACHE_MAX)
-        assert len(qz._CODES_CACHE) <= qz._CODES_CACHE_MAX
-        assert entries[0].unpersisted and entries[1].unpersisted
-        assert not entries[-1].unpersisted
+        entries = [put(i) for i in range(BOUNDED_ENTRIES)]
+        assert put(0) is entries[0]  # hit: entry 0 becomes most recent
+        entries += [put(i) for i in range(BOUNDED_ENTRIES, BOUNDED_ENTRIES + 2)]
+        assert len(cache_info("lru_test").keys) == BOUNDED_ENTRIES
+        assert not _is_persisted(entries[1]) and not _is_persisted(entries[2])
+        assert _is_persisted(entries[0]) and _is_persisted(entries[-1])
     finally:
-        qz._CODES_CACHE.clear()
-        qz._CODES_CACHE.update(saved)
+        invalidate(sf)
+    assert not cache_info("lru_test").keys
+    assert not _is_persisted(entries[-1])
 
 
 def test_pq_encode_goes_through_bounded_cache(spark):
-    """Wiring check: pq_encode inserts via _cache_put_bounded (so the
-    bound above actually governs it) and hits refresh LRU order."""
-    import inspect
-
+    """Behaviour check: sweeping pq_encode over more parameter sets than
+    the bound keeps at most BOUNDED_ENTRIES encoded corpora, evicting
+    (and unpersisting) the oldest."""
     from labs_stream_processing_examples_scala_spark.operators import (
         quantization as qz,
     )
+    from labs_stream_processing_examples_scala_spark.session import (
+        BOUNDED_ENTRIES,
+        cache_info,
+    )
 
-    src = inspect.getsource(qz.pq_encode)
-    assert "_cache_put_bounded" in src and "_cache_get_refresh" in src
-    assert "_CODES_CACHE[key] =" not in src
+    codes = [
+        qz.pq_encode(spark, SF_SMOKE, m=4, k_codes=4, n_iter=i)
+        for i in range(1, BOUNDED_ENTRIES + 3)
+    ]
+    assert len(cache_info("pq_codes").keys) == BOUNDED_ENTRIES
+    assert not _is_persisted(codes[0]) and not _is_persisted(codes[1])
+    assert _is_persisted(codes[-1])
 
 
 # --- ADVICE 3: PYTHONPATH rollback restores UNSET, not empty-string ----

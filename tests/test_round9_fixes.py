@@ -14,7 +14,7 @@
 3. lsh_neardup_pairs validates n_probes against the 2^bits bucket
    count at the entry point (ADVICE r8: argpartition raised an opaque
    executor-side numpy error past it).
-4. _PROBE_CACHE / _GRAPH_CACHE are LRU-bounded with unpersist on
+4. the probe / graph session caches are LRU-bounded with unpersist on
    eviction (ADVICE r8: a parameter sweep accumulated unbounded
    executor storage).
 5. Cross-process OCC under CONFLICTING footprints (verdict r8 task
@@ -193,22 +193,24 @@ def test_probe_cache_lru_evicts_and_unpersists(spark):
     oldest entry and unpersist it (executor storage actually released,
     not just dereferenced)."""
     from labs_stream_processing_examples_scala_spark.operators import similarity as SIM
+    from labs_stream_processing_examples_scala_spark.session import (
+        BOUNDED_ENTRIES,
+        cache_info,
+        invalidate,
+    )
 
-    SIM._PROBE_CACHE.clear()
     dfs = []
-    for i in range(SIM._PROBE_CACHE_MAX + 2):
+    for i in range(BOUNDED_ENTRIES + 2):
         df = SIM._probe_expanded(spark, SF_SMOKE, n_tables=2, bits=4, n_probes=2 + i)
         dfs.append(df)
-    assert len(SIM._PROBE_CACHE) == SIM._PROBE_CACHE_MAX
+    assert len(cache_info("probe_expanded").keys) == BOUNDED_ENTRIES
     # the first two entries were evicted AND unpersisted
     for df in dfs[:2]:
         assert df.storageLevel.useMemory is False and df.storageLevel.useDisk is False
     # survivors stay persisted
     assert dfs[-1].storageLevel.useMemory or dfs[-1].storageLevel.useDisk
-    from labs_stream_processing_examples_scala_spark.operators import dedup
-
-    dedup.invalidate_cache(SF_SMOKE)
-    assert not SIM._PROBE_CACHE, "invalidate_cache must cascade to _PROBE_CACHE"
+    invalidate(SF_SMOKE)
+    assert not cache_info("probe_expanded").keys, "invalidate must drop the probe entries"
 
 
 # --- 5. cross-process OCC with CONFLICTING footprints (verdict #4) ----

@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from labs_stream_processing_examples_scala_spark.plans.enrichment import enrichment_pipeline, enrichment_with_errors
+from labs_stream_processing_examples_scala_spark.session import invalidate
 from labs_stream_processing_examples_scala_spark.streaming.pipeline import StreamingEnrichmentPipeline
 from labs_stream_processing_examples_scala_spark.streaming.retry import RetryExhausted, with_retry
 from labs_stream_processing_examples_scala_spark.streaming.sinks import RecordSink, idempotent_write
@@ -230,33 +231,95 @@ def test_kill_and_restart_recovers_exactly(spark, tmp_path):
     assert rec["rows_replayed_or_new"] > 0, rec
 
 
-def test_restart_after_kill_during_first_offset_write(spark, tmp_path):
-    """A query stopped while writing its first offset-log entry leaves
-    only a hidden temp file in offsets/ (seen under tools/chaos_fuzz.py
-    kills). Spark 4.1 refuses to start batch 0 on a non-empty
-    checkpoint, so the restart must clear that aborted write and then
-    deliver every message."""
-    import os
-
+def _first_offset_fqueue_pipeline(spark, tmp_path):
     from labs_stream_processing_examples_scala_spark.sources import queue_source as Q
 
     qdir = str(tmp_path / "q")
     Q.publish(qdir, [(str(i), f"Input Data: {i}") for i in range(50)])
     Q.register(spark)
     pipe = _pipeline(tmp_path, chaos=False)
-    offsets = tmp_path / "ckpt" / "offsets"
-    offsets.mkdir(parents=True)
-    (offsets / ".0.6f1c2a7e-0000-4000-8000-000000000000.tmp").write_text("v1\n")
-    msgs = (
-        spark.readStream.format("fqueue")
-        .option("path", qdir)
-        .load()
-        .select(F.col("key").cast("long").alias("id"), F.col("value"))
+
+    def run():
+        msgs = (
+            spark.readStream.format("fqueue")
+            .option("path", qdir)
+            .load()
+            .select(F.col("key").cast("long").alias("id"), F.col("value"))
+        )
+        q = pipe.start(msgs, trigger_once=True)
+        q.awaitTermination(120)
+        assert q.exception() is None, q.exception()
+        assert pipe.output(spark).count() == 50
+
+    return pipe.checkpoint_path, run
+
+
+def _first_offset_cdc_ingest(spark, tmp_path):
+    from labs_stream_processing_examples_scala_spark.operators import merge as MG
+    from labs_stream_processing_examples_scala_spark.streaming.cdc_ingest import (
+        run_cdc_ingest,
+        write_cdc_batch_file,
     )
-    q = pipe.start(msgs, trigger_once=True)
-    q.awaitTermination(120)
-    assert q.exception() is None, q.exception()
-    assert pipe.output(spark).count() == 50
+
+    src, target = str(tmp_path / "src"), str(tmp_path / "target")
+    os.makedirs(src)
+    cust = spark.createDataFrame(
+        [(1, "a", "s1", 10.0), (2, "b", "s2", 20.0)],
+        "c_custkey long, c_name string, c_mktsegment string, c_acctbal double",
+    )
+    MG.scd2_init(cust).write.partitionBy("c_mktsegment").parquet(target)
+    write_cdc_batch_file(
+        spark.createDataFrame([(1, 15.0, "u")], "c_custkey long, new_value double, op string"),
+        src, 0,
+    )
+
+    def run():
+        sink = run_cdc_ingest(
+            spark, src, target, "c_custkey", "c_acctbal", "c_mktsegment", timeout=120
+        )
+        assert sink.last_batch_id() == 0
+        assert sink.view(spark).filter("c_custkey = 1").count() == 2
+
+    return target + ".ckpt", run
+
+
+def _first_offset_incremental_dedup(spark, tmp_path):
+    from labs_stream_processing_examples_scala_spark.streaming.incremental_dedup import (
+        run_incremental,
+    )
+
+    src, work = str(tmp_path / "src"), str(tmp_path / "work")
+    spark.createDataFrame(
+        [(1, "one two three four five"), (2, "one two three four five")],
+        "doc_id long, text string",
+    ).coalesce(1).write.parquet(src)
+
+    def run():
+        assert run_incremental(spark, src, work, timeout=120).pairs(spark).count() == 1
+
+    return os.path.join(work, "ckpt"), run
+
+
+@pytest.mark.parametrize(
+    "entry",
+    [
+        pytest.param(_first_offset_fqueue_pipeline, id="fqueue_pipeline"),
+        pytest.param(_first_offset_cdc_ingest, id="cdc_ingest"),
+        pytest.param(_first_offset_incremental_dedup, id="incremental_dedup"),
+    ],
+)
+def test_restart_after_kill_during_first_offset_write(spark, tmp_path, entry):
+    """A query stopped while writing its first offset-log entry leaves
+    only a hidden temp file in offsets/ (seen under tools/chaos_fuzz.py
+    kills). Spark 4.1 refuses to start batch 0 on a non-empty
+    checkpoint, so every streaming entry point must clear that aborted
+    write on restart and then deliver every message."""
+    ckpt, run = entry(spark, tmp_path)
+    offsets = os.path.join(ckpt, "offsets")
+    os.makedirs(offsets)
+    with open(os.path.join(offsets, ".0.6f1c2a7e-0000-4000-8000-000000000000.tmp"), "w") as f:
+        f.write("v1\n")
+    run()
     assert "0" in os.listdir(offsets)
 
 
@@ -442,7 +505,6 @@ def test_streaming_ingest_pipeline_matches_greedy_oracle(spark, tmp_path):
     from labs_stream_processing_examples_scala_spark.operators.dedup import (
         lsh_candidate_pairs,
         shingle_hash_arrays,
-        invalidate_cache,
     )
     from labs_stream_processing_examples_scala_spark.operators.sampling import RESAMPLE_BANDS, _bucket
     from labs_stream_processing_examples_scala_spark.sources.batch import load_table
@@ -518,7 +580,7 @@ def test_streaming_ingest_pipeline_matches_greedy_oracle(spark, tmp_path):
     want_ids = {d for d in kept if buckets[d] < band_pct(eligible[d])}
 
     assert got_ids == want_ids
-    invalidate_cache()
+    invalidate()
 
 
 def test_ingest_plus_rerank_equals_batch_pipeline(spark, tmp_path):
@@ -535,10 +597,7 @@ def test_ingest_plus_rerank_equals_batch_pipeline(spark, tmp_path):
         corpus_pipeline,
         quality_rerank,
     )
-    from labs_stream_processing_examples_scala_spark.operators.dedup import (
-        invalidate_cache,
-        lsh_candidate_pairs,
-    )
+    from labs_stream_processing_examples_scala_spark.operators.dedup import lsh_candidate_pairs
     from labs_stream_processing_examples_scala_spark.sources.batch import load_table
     from labs_stream_processing_examples_scala_spark.streaming.ingest_pipeline import run_ingest
 
@@ -586,7 +645,7 @@ def test_ingest_plus_rerank_equals_batch_pipeline(spark, tmp_path):
         .collect()
     }
     assert got == want
-    invalidate_cache()
+    invalidate()
 
 
 def test_ingest_drop_set_bounded_plan(spark, tmp_path):

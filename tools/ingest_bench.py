@@ -110,7 +110,7 @@ def bench_ivf(spark, sf_dir: str, splits: int, timeout: float = 1800.0) -> dict:
         walls = _timed_batches(proc)
         t0 = time.perf_counter()
         drive_bounded(
-            spark, src, ["vec_id", "embedding"], proc.process_batch, work,
+            spark, src, ["vec_id", "embedding"], proc.process_batch, os.path.join(work, "ckpt"),
             files_per_trigger=1, timeout=timeout, label="ivf ingest",
         )
         ingest_s = time.perf_counter() - t0
@@ -155,7 +155,7 @@ def bench_nsw(spark, sf_dir: str, splits: int, timeout: float = 1800.0) -> dict:
         walls = _timed_batches(proc)
         t0 = time.perf_counter()
         drive_bounded(
-            spark, src, ["vec_id", "embedding"], proc.process_batch, work,
+            spark, src, ["vec_id", "embedding"], proc.process_batch, os.path.join(work, "ckpt"),
             files_per_trigger=1, timeout=timeout, label="nsw ingest",
         )
         ingest_s = time.perf_counter() - t0
@@ -208,7 +208,7 @@ def bench_dedup(spark, sf_dir: str, splits: int, timeout: float = 1800.0) -> dic
         walls = _timed_batches(proc)
         t0 = time.perf_counter()
         drive_bounded(
-            spark, src, ["doc_id", "text"], proc.process_batch, work,
+            spark, src, ["doc_id", "text"], proc.process_batch, os.path.join(work, "ckpt"),
             files_per_trigger=1, timeout=timeout, label="dedup ingest",
         )
         ingest_s = time.perf_counter() - t0

@@ -103,14 +103,12 @@ def main() -> int:
 
     (out_dir / f"_stats_{tag}.json").write_text(json.dumps(stats, indent=1))
     try:
-        from labs_stream_processing_examples_scala_spark import (
+        from labs_stream_processing_examples_scala_spark.session import (
+            invalidate,
             release_persisted_rdds,
         )
-        from labs_stream_processing_examples_scala_spark.operators import (
-            dedup as _dedup,
-        )
 
-        _dedup.invalidate_cache()
+        invalidate()
         release_persisted_rdds(spark)
         spark.stop()
     except Exception as e:  # noqa: BLE001
