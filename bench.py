@@ -272,6 +272,10 @@ CACHE_WARM_PREFIXES = (
     "q66_",
     "q68_",
     "q70_",
+    # x_freq_heavy_hitters memoizes its per-partition Misra-Gries
+    # summaries (frequency.mg_summaries) on first run, so a retry
+    # re-runs warm like the families above
+    "x_freq_",
 )
 
 

@@ -76,6 +76,10 @@ from labs_stream_processing_examples_scala_spark.operators import cow_table as C
 
 DELETES = "_deletes"
 _REF_RE = r"([^/]+/[^/]+)$"  # <partition-dir>/<file-name>
+#: the one schema every vector writer produces (mor_delete, mor_upsert;
+#: restore and compaction only link or drop whole delta dirs). Reading
+#: with it skips Spark's per-read parquet schema-inference job.
+VECTOR_SCHEMA = "file_ref string, pos long, part string"
 
 
 def _delete_dirs(gen_dir: str) -> list[str]:
@@ -86,7 +90,7 @@ def _read_vectors(spark: SparkSession, gen_dir: str) -> DataFrame | None:
     dirs = [d for d in _delete_dirs(gen_dir) if glob.glob(os.path.join(d, "*.parquet"))]
     if not dirs:
         return None
-    return spark.read.parquet(*dirs)
+    return spark.read.schema(VECTOR_SCHEMA).parquet(*dirs)
 
 
 def _with_row_id(df: DataFrame) -> DataFrame:
@@ -304,6 +308,18 @@ def _planning_read(spark: SparkSession, path: str, base: int, added):
         ) from None
 
 
+def _vector_footprint(dv: DataFrame) -> tuple[int, list]:
+    """Row count and distinct ``part`` values of a vector delta in one
+    aggregate. ``collect_set`` drops nulls, so the null partition is
+    reported by its own flag."""
+    r = dv.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.collect_set("part").alias("parts"),
+        F.max(F.col("part").isNull()).alias("has_null"),
+    ).first()
+    return r["n"], list(r["parts"]) + ([None] if r["has_null"] else [])
+
+
 def _occ_commit_delta(
     spark: SparkSession,
     path: str,
@@ -328,62 +344,73 @@ def _occ_commit_delta(
     live generation) — or raise :class:`cow_table.CommitConflictError`
     for the caller's re-plan loop. A base older than the retention
     window conflicts up front (its generation is gone; the lazy plans
-    would die mid-write otherwise)."""
-    with CT._writer_lock(path):
-        CT.recover(path)
-        live = CT.read_manifest(path)["version"]
-        if live != base and not os.path.isdir(CT._gen_dir(path, base)):
-            raise CT.CommitConflictError(
-                f"base generation {base} of {path} left the retention "
-                "window while planning — re-plan from the live version"
+    would die mid-write otherwise).
+
+    The vector delta is persisted (it is ∝ changed rows) and released
+    on every exit: one aggregate over it gives the commit log's row
+    count and the partition footprint, and the write then reads the
+    cache instead of re-planning the delta. Appended rows are
+    hash-partitioned on ``partition_col`` first, so each commit adds
+    one file per partition value."""
+    dv = dv.persist()
+    try:
+        with CT._writer_lock(path):
+            CT.recover(path)
+            live = CT.read_manifest(path)["version"]
+            if live != base and not os.path.isdir(CT._gen_dir(path, base)):
+                raise CT.CommitConflictError(
+                    f"base generation {base} of {path} left the retention "
+                    "window while planning — re-plan from the live version"
+                )
+            new = live + 1
+            new_dir = _stage_next(path, live)
+            try:
+                n, dv_parts = _vector_footprint(dv)
+                dv.write.parquet(os.path.join(new_dir, DELETES, f"d{new}"))
+                appended_dirs: list[str] = []
+                moved = 0
+                if appended is not None:
+                    stage = os.path.join(new_dir, f"_append_stage_v{new}")
+                    appended.repartition(partition_col).write.partitionBy(
+                        partition_col
+                    ).parquet(stage)
+                    for e in sorted(os.listdir(stage)):
+                        if not CT._is_partition_entry(e):
+                            continue
+                        os.makedirs(os.path.join(new_dir, e), exist_ok=True)
+                        appended_dirs.append(e)
+                        for f in os.listdir(os.path.join(stage, e)):
+                            if f.endswith(".parquet"):
+                                os.rename(
+                                    os.path.join(stage, e, f),
+                                    os.path.join(new_dir, e, f),
+                                )
+                                moved += 1
+                    shutil.rmtree(stage, ignore_errors=True)
+                written = sorted(
+                    set(appended_dirs) | set(_dirs_for_parts(new_dir, dv_parts))
+                )
+                if live != base:
+                    CT._heal_root_log(path, live)
+                    CT.check_commit_conflict(path, base, live, written)
+            except CT.CommitConflictError:
+                shutil.rmtree(new_dir, ignore_errors=True)
+                raise
+            _commit(
+                path, new,
+                {"operation": operation, "vector_rows": n,
+                 **({"appended_files": moved} if appended is not None else {}),
+                 **(log_extra or {})},
+                written=written,
+                extra_meta=extra_meta,
+                keep_generations=keep_generations,
             )
-        new = live + 1
-        new_dir = _stage_next(path, live)
-        try:
-            dv.write.parquet(os.path.join(new_dir, DELETES, f"d{new}"))
-            delta = spark.read.parquet(os.path.join(new_dir, DELETES, f"d{new}"))
-            n = delta.count()
-            dv_parts = [r[0] for r in delta.select("part").distinct().collect()]
-            appended_dirs: list[str] = []
-            moved = 0
-            if appended is not None:
-                stage = os.path.join(new_dir, f"_append_stage_v{new}")
-                appended.write.partitionBy(partition_col).parquet(stage)
-                for e in sorted(os.listdir(stage)):
-                    if not CT._is_partition_entry(e):
-                        continue
-                    os.makedirs(os.path.join(new_dir, e), exist_ok=True)
-                    appended_dirs.append(e)
-                    for f in os.listdir(os.path.join(stage, e)):
-                        if f.endswith(".parquet"):
-                            os.rename(
-                                os.path.join(stage, e, f),
-                                os.path.join(new_dir, e, f),
-                            )
-                            moved += 1
-                shutil.rmtree(stage, ignore_errors=True)
-            written = sorted(
-                set(appended_dirs) | set(_dirs_for_parts(new_dir, dv_parts))
-            )
-            if live != base:
-                CT._heal_root_log(path, live)
-                CT.check_commit_conflict(path, base, live, written)
-        except CT.CommitConflictError:
-            shutil.rmtree(new_dir, ignore_errors=True)
-            raise
-        _commit(
-            path, new,
-            {"operation": operation, "vector_rows": n,
-             **({"appended_files": moved} if appended is not None else {}),
-             **(log_extra or {})},
-            written=written,
-            extra_meta=extra_meta,
-            keep_generations=keep_generations,
-        )
-        return {
-            "version": new, "vector_rows": n,
-            **({"appended_files": moved} if appended is not None else {}),
-        }
+            return {
+                "version": new, "vector_rows": n,
+                **({"appended_files": moved} if appended is not None else {}),
+            }
+    finally:
+        dv.unpersist()
 
 
 def mor_delete(
@@ -475,13 +502,36 @@ def mor_upsert(
     merge.scd2_apply_cdc semantics on this tier): a named delete
     position-deletes the key's CURRENT row and appends only its CLOSED
     version (the SCD2 tombstone — history ends, no reopen); a key in
-    both sets takes the delete; duplicate delete keys are distinct-ed.
+    both sets takes the delete; duplicate keys fold into one change (a
+    repeated update keeps its max value, as the CDC sinks aggregate).
     ``extra_meta`` rides the manifest flip atomically (the streaming
-    sink's txn-version idiom, streaming/cdc_ingest.py)."""
-    from labs_stream_processing_examples_scala_spark.operators.merge import (
-        SCD2_COLS, _scd2_inserts,
-    )
+    sink's txn-version idiom, streaming/cdc_ingest.py).
 
+    One pass: the change batch becomes one row per key (``__del`` —
+    deletes win — and the update value ``__nv``), and ONE persisted
+    frame, the current rows right-outer-joined to it, carries every
+    decision. Its rows with a row id are the deletion vector; a single
+    projection of it yields the appended rows (matched update → closed
+    + opened, matched delete → closed, unmatched update → insert). The
+    base and the batch are each scanned once per commit attempt."""
+    from labs_stream_processing_examples_scala_spark.operators.merge import SCD2_COLS
+
+    changes = updates.select(
+        F.col(update_key).alias("__ck"),
+        F.col(new_value_col).alias("__nv"),
+        F.lit(False).alias("__del"),
+    )
+    if delete_keys is not None:
+        changes = changes.unionByName(
+            delete_keys.select(
+                F.col(delete_key).alias("__ck"),
+                F.lit(None).alias("__nv"),
+                F.lit(True).alias("__del"),
+            )
+        )
+    changes = changes.groupBy("__ck").agg(
+        F.max("__nv").alias("__nv"), F.max("__del").alias("__del")
+    )
     conflicts = 0
     wait = CT.lock_retry_loop(lock_timeout)
     while True:
@@ -501,85 +551,56 @@ def mor_upsert(
             if conflicts >= max_retries:
                 raise
             continue
+        # the PROJECTED schema (evolved columns included): appended
+        # rows are written in it
+        schema = data.schema
         base_cols = [c for c in data.columns if c not in ("__ref", "__pos")]
-        carried = [
-            c for c in base_cols if c not in {key, versioned_col, *SCD2_COLS}
-        ]
-        # hint-free: AQE sizes the change-batch join (merge.py policy)
-        u = updates.select(F.col(update_key).alias("u_key_m"), new_value_col)
-        cur_rows = data.filter("is_current")
-        if delete_keys is not None:
-            dels = delete_keys.select(F.col(delete_key).alias("d_key_m")).distinct()
-            del_hit = cur_rows.join(dels, F.col(key) == F.col("d_key_m"), "inner")
-            upd_base = cur_rows.join(dels, F.col(key) == F.col("d_key_m"), "left_anti")
-            upd_for_insert = updates.join(
-                dels.select(F.col("d_key_m").alias("__dk")),
-                F.col(update_key) == F.col("__dk"),
-                "left_anti",
-            )
-        else:
-            del_hit = None
-            upd_base = cur_rows
-            upd_for_insert = updates
-        hit = upd_base.join(u, F.col(key) == F.col("u_key_m"), "inner")
+        carried = {c for c in base_cols if c not in {key, versioned_col, *SCD2_COLS}}
+        # hint-free: AQE sizes the change-batch join (merge.py policy).
+        # The key column takes the change key, so an unmatched update
+        # (an insert) carries its own key and insert_partition sees it.
+        touched = (
+            data.filter("is_current")
+            .join(changes, F.col(key) == F.col("__ck"), "right")
+            .filter(F.col("__ref").isNotNull() | ~F.col("__del"))
+            .withColumn(key, F.col("__ck").cast(schema[key].dataType))
+        )
+        matched = F.col("__ref").isNotNull()
+        dv = touched.filter(matched).select(
+            F.col("__ref").alias("file_ref"),
+            F.col("__pos").alias("pos"),
+            F.col(partition_col).cast("string").alias("part"),
+        )
 
-        def _positions(df: DataFrame) -> DataFrame:
-            return df.select(
-                F.col("__ref").alias("file_ref"),
-                F.col("__pos").alias("pos"),
-                F.col(partition_col).cast("string").alias("part"),
-            )
+        def version(**cols):
+            # one appended row in the table's column order and types;
+            # unnamed columns carry the current row's value
+            return F.struct(*[
+                cols[c].cast(schema[c].dataType).alias(c) if c in cols else F.col(c)
+                for c in base_cols
+            ])
 
-        dv = _positions(hit)
-        if del_hit is not None:
-            dv = dv.unionByName(_positions(del_hit))
-        closed = F.struct(
-            F.col(versioned_col).alias("val"),
-            F.col("valid_from").alias("valid_from"),
-            F.lit(change_date).alias("valid_to"),
-            F.lit(False).alias("is_current"),
+        new_version = {
+            versioned_col: F.col("__nv"),
+            "valid_from": F.lit(change_date),
+            "valid_to": F.lit(None),
+            "is_current": F.lit(True),
+        }
+        closed = version(valid_to=F.lit(change_date), is_current=F.lit(False))
+        opened = version(**new_version)
+        inserted = version(**new_version, **{
+            c: insert_partition if c == partition_col and insert_partition is not None
+            else F.lit(None)
+            for c in carried
+        })
+        versions = (
+            F.when(matched & ~F.col("__del"), F.array(closed, opened))
+            .when(matched, F.array(closed))
+            .otherwise(F.array(inserted))
         )
-        opened = F.struct(
-            F.col(new_value_col).alias("val"),
-            F.lit(change_date).alias("valid_from"),
-            F.lit(None).cast("string").alias("valid_to"),
-            F.lit(True).alias("is_current"),
-        )
-        appended = (
-            hit.select(key, *carried, F.explode(F.array(closed, opened)).alias("v"))
-            .select(
-                key, *carried,
-                F.col("v.val").alias(versioned_col),
-                "v.valid_from", "v.valid_to", "v.is_current",
-            )
-        )
-        if del_hit is not None:
-            # the SCD2 tombstone: the deleted key's history CLOSES —
-            # its open row is position-deleted, only the closed version
-            # is appended, nothing reopens
-            appended = appended.unionByName(
-                del_hit.select(
-                    key, *carried,
-                    F.col(versioned_col),
-                    F.col("valid_from"),
-                    F.lit(change_date).alias("valid_to"),
-                    F.lit(False).alias("is_current"),
-                )
-            )
-        overrides = (
-            {partition_col: insert_partition} if insert_partition is not None else None
-        )
-        # insert rows take the PROJECTED schema (added columns included
-        # with their defaults materialized by _visible_with_row_id) —
-        # sampling spark.read.parquet(base_dir).schema on a
-        # mixed-schema generation was nondeterministic (round-8 ADVICE)
-        inserts = _scd2_inserts(
-            cur_rows.select(F.col(key)),
-            data.drop("__ref", "__pos").schema,
-            upd_for_insert, key, update_key, versioned_col, new_value_col, carried,
-            change_date, carried_overrides=overrides,
-        )
-        appended = appended.unionByName(inserts).select(*base_cols)
+        appended = touched.select(F.explode(versions).alias("v")).select("v.*")
+        # the vector and the appended rows both read this one frame
+        touched.persist()
         try:
             s = _occ_commit_delta(
                 spark, path, base, dv, "mor_upsert",
@@ -596,6 +617,8 @@ def mor_upsert(
             if not wait():
                 raise
             continue
+        finally:
+            touched.unpersist()
         return {
             "version": s["version"],
             "position_deletes": s["vector_rows"],
@@ -730,7 +753,9 @@ def mor_table_changes(
         d = to_dirs.get(name) or from_dirs[name]
         if glob.glob(os.path.join(d, "*.parquet")):
             delta_parts.update(
-                r[0] for r in spark.read.parquet(d).select("part").distinct().collect()
+                r[0]
+                for r in spark.read.schema(VECTOR_SCHEMA).parquet(d)
+                .select("part").distinct().collect()
             )
     old_all = read_mor(spark, path, version=from_version)
     new_all = read_mor(spark, path, version=to_version)

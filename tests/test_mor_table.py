@@ -550,3 +550,196 @@ def test_writer_lock_releases_proc_lock_on_live_holder(tmp_path):
     lk = CT._proc_lock(path)
     assert lk.acquire(blocking=False)
     lk.release()
+
+
+# --- one-pass mor_upsert: edge cases, release of persisted frames,
+# --- one scan of the change batch, job budget ---------------------------
+
+
+_COLS = ("k", "p", "val", "tier", "valid_from", "valid_to", "is_current")
+
+
+@pytest.mark.parametrize("derive_partition", [False, True])
+def test_mor_cdc_edge_cases_match_cow_cdc_merge(spark, tmp_path, derive_partition):
+    """One CDC batch holding every edge of the change frame, merged on
+    twin targets through mor_upsert and merge_cow_cdc, with
+    scd2_apply_cdc as the in-memory reference:
+    - key 1 is updated AND deleted: the delete wins;
+    - keys 999 and 301 are deletes with no current row: no vector row;
+    - key 5 is deleted twice: one tombstone;
+    - key 300 is an unknown update: an insert, into the null partition
+      or the partition insert_partition derives from the key;
+    - key 200's current row lives in the null partition;
+    - ``tier`` is an alter_add_column-evolved column."""
+    mor, cow = str(tmp_path / "mor"), str(tmp_path / "cow")
+    null_row = MG.scd2_init(
+        spark.createDataFrame([(200, None, 9.0)], "k long, p string, val double")
+    )
+    for path in (mor, cow):
+        _init(spark, path)
+        CT.append_cow(spark, null_row, path, "p")
+        CT.alter_add_column(path, "tier", "string",
+                            "CASE WHEN val >= 12 THEN 'high' ELSE 'low' END")
+    before = MT.read_mor(spark, mor)
+    upd = _upd(spark, [(1, 11.0), (3, 33.0), (200, 2.0), (300, 3.0)])
+    dels = spark.createDataFrame([(1,), (5,), (5,), (999,), (301,)], "d_key long")
+    k = F.col("k")
+    derived = (
+        F.when(k % 3 == 0, "A").when(k % 3 == 1, "B").otherwise("C")
+        if derive_partition else None
+    )
+    ref = MG.scd2_apply_cdc(
+        before, upd, dels, "k", "u_key", "d_key", "val", "new_val",
+        change_date="1998-01-01",
+        carried_overrides={"p": derived} if derive_partition else None,
+    )
+    # reads fill a null evolved column with its default: so must the reference
+    ref = CT._project_added(ref, CT.read_manifest(mor)["added_columns"])
+    ref_rows = frozenset(tuple(r) for r in ref.select(*_COLS).collect())
+
+    s = MT.mor_upsert(
+        spark, mor, upd, "k", "u_key", "val", "new_val", "p",
+        change_date="1998-01-01", insert_partition=derived,
+        delete_keys=dels, delete_key="d_key",
+    )
+    MG.merge_cow_cdc(
+        spark, cow, upd, dels, "k", "u_key", "d_key", "val", "new_val", "p",
+        change_date="1998-01-01", insert_partition=derived,
+    )
+    # matched current rows: 1 and 5 (deletes), 3 and 200 (updates)
+    assert s["position_deletes"] == 4
+    mor_rows = frozenset(tuple(r) for r in MT.read_mor(spark, mor).select(*_COLS).collect())
+    cow_rows = frozenset(tuple(r) for r in CT.read_cow(spark, cow).select(*_COLS).collect())
+    assert mor_rows == cow_rows == ref_rows
+    assert not any(r[0] in (999, 301) for r in mor_rows)
+    k300 = [r for r in mor_rows if r[0] == 300]
+    assert [r[1] for r in k300] == (["A"] if derive_partition else [None])
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_mor_cdc_sink_releases_every_persisted_frame(spark, tmp_path, monkeypatch):
+    """process_batch persists the batch, mor_upsert the joined frame and
+    the commit the vector delta. None of them may outlive the batch:
+    not on success, not on a replay skip, and not on a re-plan after an
+    injected CommitConflictError."""
+    from labs_stream_processing_examples_scala_spark.streaming.cdc_ingest import MorCdcSink
+
+    path = str(tmp_path / "t")
+    _init(spark, path)
+    sink = MorCdcSink(path, "k", "val", "p")
+    schema = "k long, new_value double, op string"
+    start = _persisted(spark)
+
+    sink.process_batch(spark.createDataFrame([(1, 10.0, "u"), (2, None, "d")], schema), 0)
+    sink.process_batch(spark.createDataFrame([(7, 70.0, "u")], schema), 0)  # replay skip
+    assert _persisted(spark) == start
+
+    real = MT._occ_commit_delta
+    fired = []
+
+    def racing_commit(spark_, p, base, *a, **kw):
+        if not fired:
+            fired.append(base)
+            # an interleaved writer on partition B (k=4) conflicts with
+            # this batch's update of k=1, also in B
+            MT.mor_delete(spark, p, F.col("k") == 4, "p")
+        return real(spark_, p, base, *a, **kw)
+
+    monkeypatch.setattr(MT, "_occ_commit_delta", racing_commit)
+    sink.process_batch(spark.createDataFrame([(1, 20.0, "u"), (8, None, "d")], schema), 1)
+    assert fired, "the conflict was not injected"
+    assert sink.last_batch_id() == 1
+    assert _persisted(spark) == start
+    got = {(r["k"], r["val"]) for r in MT.read_mor(spark, path).filter("is_current").collect()}
+    assert (1, 20.0) in got and not {k for k, _ in got} & {2, 4, 8}
+
+
+def test_cdc_ingest_scans_each_change_file_once(spark, tmp_path):
+    """numInputRows counts every row the source read for a micro-batch:
+    with the batch persisted it equals the change file's row count,
+    where an unpersisted batch counted one scan per frame the merge
+    built from it."""
+    import threading
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from labs_stream_processing_examples_scala_spark.streaming.cdc_ingest import (
+        MorCdcSink, run_cdc_ingest, write_cdc_batch_file,
+    )
+
+    path, src = str(tmp_path / "t"), str(tmp_path / "cdc")
+    _init(spark, path)
+    os.makedirs(src)
+    batches = [
+        [(1, 100.0, "u"), (100, 1.0, "u"), (2, None, "d")],
+        [(3, 33.0, "u"), (4, None, "d")],
+    ]
+    for i, rows in enumerate(batches):
+        write_cdc_batch_file(
+            spark.createDataFrame(rows, "k long, new_value double, op string"), src, i
+        )
+    seen, lock = {}, threading.Lock()
+
+    class Rows(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            if any(src in s.description for s in p.sources):
+                with lock:
+                    seen[p.batchId] = p.numInputRows
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = Rows()
+    spark.streams.addListener(listener)
+    try:
+        run_cdc_ingest(spark, src, path, "k", "val", "p", sink_cls=MorCdcSink)
+        deadline = time.monotonic() + 30
+        while len(seen) < len(batches) and time.monotonic() < deadline:
+            time.sleep(0.05)  # progress events arrive on the listener bus
+    finally:
+        spark.streams.removeListener(listener)
+    assert seen == {i: len(rows) for i, rows in enumerate(batches)}
+
+
+#: jobs one MorCdcSink.process_batch runs at fixture size (measured):
+#: parquet schema inference of the base, the batch cache (one stage per
+#: change arm), the vector broadcast, the change-frame shuffle, the
+#: current-row broadcast, the joined frame's and the vector delta's
+#: cache, the footprint aggregate (shuffle + result), the vector write
+#: and the appended rows' shuffle and write
+MOR_CDC_JOB_BUDGET = 13
+
+
+def test_mor_cdc_batch_job_budget(spark, tmp_path):
+    """The one-pass merge's job count, bounded so a re-introduced
+    re-scan or read-back shows up as a failure."""
+    from labs_stream_processing_examples_scala_spark.streaming.cdc_ingest import MorCdcSink
+
+    path = str(tmp_path / "t")
+    _init(spark, path)
+    MT.mor_delete(spark, path, F.col("k") == 0, "p")  # the base carries vectors
+    sink = MorCdcSink(path, "k", "val", "p")
+    batch = spark.createDataFrame(
+        [(1, 10.0, "u"), (2, None, "d"), (100, 1.0, "u")], "k long, new_value double, op string"
+    )
+    sc = spark.sparkContext
+    group = f"mor-cdc-budget-{os.getpid()}"
+    sc.setJobGroup(group, "one MorCdcSink batch")
+    try:
+        sink.process_batch(batch, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= MOR_CDC_JOB_BUDGET, jobs

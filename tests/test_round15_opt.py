@@ -124,3 +124,13 @@ def test_merge_family_defends_first_run():
 
     for q in ("q65_merge_scd2", "q66_merge_delete", "q68_merge_evolve", "q70_merge_mor"):
         assert q.startswith(bench.CACHE_WARM_PREFIXES), q
+
+
+def test_memoizing_headline_queries_defend_first_run():
+    """x_freq_heavy_hitters memoizes its Misra-Gries summaries on first
+    run: a dirty-window retry runs warm, so the first run must stay the
+    defended number."""
+    import bench
+
+    assert "x_freq_heavy_hitters" in bench.HEADLINE
+    assert "x_freq_heavy_hitters".startswith(bench.CACHE_WARM_PREFIXES)

@@ -78,6 +78,7 @@ def main() -> int:
             if args.tool == "bench":
                 pair[tag] = {
                     "value": rec["value"],
+                    "queries": rec.get("queries"),
                     "calibration": rec.get("calibration"),
                     "retries_n": rec.get("retries_n"),
                 }
