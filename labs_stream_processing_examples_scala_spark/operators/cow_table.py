@@ -775,6 +775,26 @@ def changed_partitions(path: str, from_version: int, to_version: int) -> list[st
     )
 
 
+def _vector_footprint(delta_dirs) -> tuple[int, list]:
+    """Row count and distinct ``part`` values of the deletion-vector
+    deltas in ``delta_dirs`` (``_deletes/d{K}`` dirs), read on the
+    driver with pyarrow: the count from the parquet footers, the values
+    from the ``part`` column alone — no Spark job, no data file opened.
+    A null ``part`` (the null partition) is reported as None, sorted
+    last. The cost grows with the vector rows, which mor_compact
+    bounds."""
+    import pyarrow.parquet as pq
+
+    rows, parts = 0, set()
+    for d in delta_dirs:
+        for f in glob.glob(os.path.join(d, "*.parquet")):
+            with pq.ParquetFile(f) as pf:
+                if pf.metadata.num_rows:
+                    rows += pf.metadata.num_rows
+                    parts.update(pf.read(columns=["part"]).column("part").unique().to_pylist())
+    return rows, sorted(parts, key=lambda v: (v is None, v))
+
+
 def _delta_changed_partitions(path: str, from_version: int, to_version: int) -> list[str]:
     """Partition DIR NAMES affected by delete-vector trees that differ
     between two retained generations (the MOR state cow-level file
@@ -782,8 +802,9 @@ def _delta_changed_partitions(path: str, from_version: int, to_version: int) -> 
     exactly ONE of the two generations changed row visibility between
     them — a restore that rolls a delta back resurrects its rows
     without touching any data file (self-review finding, round 11).
-    Reads only the deltas' small ``part`` column, via pyarrow (this
-    module stays sparkless on its metadata paths)."""
+    Reads only the deltas' small ``part`` column
+    (:func:`_vector_footprint`; this module stays sparkless on its
+    metadata paths)."""
     import glob as _glob
     from urllib.parse import quote
 
@@ -807,23 +828,12 @@ def _delta_changed_partitions(path: str, from_version: int, to_version: int) -> 
         )
         if pcol:
             break
-    import pyarrow.parquet as pq
-
-    vals: set[str] = set()
-    want_null = unpartitioned_hit = False
-    for d in changed_deltas:
-        for f in _glob.glob(os.path.join(d, "*.parquet")):
-            for val in pq.read_table(f, columns=["part"]).column("part").to_pylist():
-                if pcol is None:
-                    unpartitioned_hit = True
-                elif val is None:
-                    want_null = True
-                else:
-                    vals.add(str(val))
+    n, footprint = _vector_footprint(changed_deltas)
+    vals = {str(v) for v in footprint if v is not None} if pcol else set()
     parts: set[str] = set()
-    if unpartitioned_hit:
+    if pcol is None and n:
         parts.add("__HIVE_DEFAULT_PARTITION__")
-    if want_null:
+    if pcol and None in footprint:
         # Spark's dir spelling for the null partition
         parts.add(f"{pcol}=__HIVE_DEFAULT_PARTITION__")
     if vals:
@@ -1346,14 +1356,10 @@ def commit_generation(
         # the bridge. A rewrite DISJOINT from the vectors' footprint
         # is safe: carry `_deletes` forward (hardlinks — the refs
         # address untouched files that ride into the new generation).
-        vec_files = glob.glob(os.path.join(cur_dir, "_deletes", "d*", "*.parquet"))
-        if vec_files:
-            vec_parts = {
-                r[0]
-                for r in out.sparkSession.read.parquet(
-                    *sorted({os.path.dirname(f) for f in vec_files})
-                ).select("part").distinct().collect()
-            }
+        vec_rows, vec_parts = _vector_footprint(
+            glob.glob(os.path.join(cur_dir, "_deletes", "d*"))
+        )
+        if vec_rows:
             from urllib.parse import unquote
 
             def _dir_touched(e: str) -> bool:

@@ -68,6 +68,7 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -134,13 +135,13 @@ def read_mor(
     vectors = _read_vectors(spark, gen_dir)
     if vectors is not None:
         # Split the scan on the vectors' partition footprint (their
-        # ``part`` column — a metadata-only collect bounded by the
-        # partition count): partitions with NO vector rows bypass the
-        # anti-join entirely and stay a bare partition-pruned scan,
-        # so the join cost is ∝ data bearing deletes, not table size.
-        # At 100 TB with deletes in three partitions, the other ten
-        # thousand never enter a join build or stream side.
-        dirty_parts = [r[0] for r in vectors.select("part").distinct().collect()]
+        # ``part`` column, read on the driver — no Spark job):
+        # partitions with NO vector rows bypass the anti-join entirely
+        # and stay a bare partition-pruned scan, so the join cost is ∝
+        # data bearing deletes, not table size. At 100 TB with deletes
+        # in three partitions, the other ten thousand never enter a
+        # join build or stream side.
+        _, dirty_parts = CT._vector_footprint(_delete_dirs(gen_dir))
         try:
             pcol = _partition_col_name(gen_dir)
         except ValueError:
@@ -308,16 +309,35 @@ def _planning_read(spark: SparkSession, path: str, base: int, added):
         ) from None
 
 
-def _vector_footprint(dv: DataFrame) -> tuple[int, list]:
-    """Row count and distinct ``part`` values of a vector delta in one
-    aggregate. ``collect_set`` drops nulls, so the null partition is
-    reported by its own flag."""
-    r = dv.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.collect_set("part").alias("parts"),
-        F.max(F.col("part").isNull()).alias("has_null"),
-    ).first()
-    return r["n"], list(r["parts"]) + ([None] if r["has_null"] else [])
+def _run_overlapped(main, side=None) -> None:
+    """Run ``side`` on a :class:`pyspark.InheritableThread` while
+    ``main`` runs on the calling thread, and return once both have
+    finished. The thread inherits the caller's Spark local properties,
+    so its jobs carry the caller's job group (a streaming query cancels
+    its jobs by that group on stop). A failure is re-raised only after
+    both have finished; when both fail, the earlier failure is
+    raised."""
+    if side is None:
+        main()
+        return
+    from pyspark import InheritableThread
+
+    failures: list[tuple[float, Exception]] = []
+
+    def guarded(fn):
+        try:
+            fn()
+        except Exception as e:
+            failures.append((time.monotonic(), e))
+
+    t = InheritableThread(target=lambda: guarded(side))
+    t.start()
+    try:
+        guarded(main)
+    finally:
+        t.join()
+    if failures:
+        raise min(failures, key=lambda f: f[0])[1]
 
 
 def _occ_commit_delta(
@@ -346,71 +366,73 @@ def _occ_commit_delta(
     window conflicts up front (its generation is gone; the lazy plans
     would die mid-write otherwise).
 
-    The vector delta is persisted (it is ∝ changed rows) and released
-    on every exit: one aggregate over it gives the commit log's row
-    count and the partition footprint, and the write then reads the
-    cache instead of re-planning the delta. Appended rows are
-    hash-partitioned on ``partition_col`` first, so each commit adds
-    one file per partition value."""
-    dv = dv.persist()
-    try:
-        with CT._writer_lock(path):
-            CT.recover(path)
-            live = CT.read_manifest(path)["version"]
-            if live != base and not os.path.isdir(CT._gen_dir(path, base)):
-                raise CT.CommitConflictError(
-                    f"base generation {base} of {path} left the retention "
-                    "window while planning — re-plan from the live version"
-                )
-            new = live + 1
-            new_dir = _stage_next(path, live)
-            try:
-                n, dv_parts = _vector_footprint(dv)
-                dv.write.parquet(os.path.join(new_dir, DELETES, f"d{new}"))
-                appended_dirs: list[str] = []
-                moved = 0
-                if appended is not None:
-                    stage = os.path.join(new_dir, f"_append_stage_v{new}")
-                    appended.repartition(partition_col).write.partitionBy(
-                        partition_col
-                    ).parquet(stage)
-                    for e in sorted(os.listdir(stage)):
-                        if not CT._is_partition_entry(e):
-                            continue
-                        os.makedirs(os.path.join(new_dir, e), exist_ok=True)
-                        appended_dirs.append(e)
-                        for f in os.listdir(os.path.join(stage, e)):
-                            if f.endswith(".parquet"):
-                                os.rename(
-                                    os.path.join(stage, e, f),
-                                    os.path.join(new_dir, e, f),
-                                )
-                                moved += 1
-                    shutil.rmtree(stage, ignore_errors=True)
-                written = sorted(
-                    set(appended_dirs) | set(_dirs_for_parts(new_dir, dv_parts))
-                )
-                if live != base:
-                    CT._heal_root_log(path, live)
-                    CT.check_commit_conflict(path, base, live, written)
-            except CT.CommitConflictError:
-                shutil.rmtree(new_dir, ignore_errors=True)
-                raise
-            _commit(
-                path, new,
-                {"operation": operation, "vector_rows": n,
-                 **({"appended_files": moved} if appended is not None else {}),
-                 **(log_extra or {})},
-                written=written,
-                extra_meta=extra_meta,
-                keep_generations=keep_generations,
+    ``dv`` is read once, by its write. The appended rows (hash-
+    partitioned on ``partition_col`` first, so each commit adds one
+    file per partition value) are written to a staging dir at the same
+    time, on a second thread (:func:`_run_overlapped`): the two writes
+    are independent, so the batch pays one write's scheduling and
+    commit wait instead of two in a row. The commit log's row count and
+    the partition footprint are then read from the written delta's
+    files on the driver (cow_table._vector_footprint), not from a Spark
+    job over ``dv``."""
+    with CT._writer_lock(path):
+        CT.recover(path)
+        live = CT.read_manifest(path)["version"]
+        if live != base and not os.path.isdir(CT._gen_dir(path, base)):
+            raise CT.CommitConflictError(
+                f"base generation {base} of {path} left the retention "
+                "window while planning — re-plan from the live version"
             )
-            return {
-                "version": new, "vector_rows": n,
-                **({"appended_files": moved} if appended is not None else {}),
-            }
-    finally:
-        dv.unpersist()
+        new = live + 1
+        new_dir = _stage_next(path, live)
+        delta_dir = os.path.join(new_dir, DELETES, f"d{new}")
+        stage = os.path.join(new_dir, f"_append_stage_v{new}")
+        try:
+            _run_overlapped(
+                lambda: dv.write.parquet(delta_dir),
+                None if appended is None else lambda: appended.repartition(
+                    partition_col
+                ).write.partitionBy(partition_col).parquet(stage),
+            )
+            n, dv_parts = CT._vector_footprint([delta_dir])
+            appended_dirs: list[str] = []
+            moved = 0
+            if appended is not None:
+                for e in sorted(os.listdir(stage)):
+                    if not CT._is_partition_entry(e):
+                        continue
+                    os.makedirs(os.path.join(new_dir, e), exist_ok=True)
+                    appended_dirs.append(e)
+                    for f in os.listdir(os.path.join(stage, e)):
+                        if f.endswith(".parquet"):
+                            os.rename(
+                                os.path.join(stage, e, f),
+                                os.path.join(new_dir, e, f),
+                            )
+                            moved += 1
+                shutil.rmtree(stage, ignore_errors=True)
+            written = sorted(
+                set(appended_dirs) | set(_dirs_for_parts(new_dir, dv_parts))
+            )
+            if live != base:
+                CT._heal_root_log(path, live)
+                CT.check_commit_conflict(path, base, live, written)
+        except CT.CommitConflictError:
+            shutil.rmtree(new_dir, ignore_errors=True)
+            raise
+        _commit(
+            path, new,
+            {"operation": operation, "vector_rows": n,
+             **({"appended_files": moved} if appended is not None else {}),
+             **(log_extra or {})},
+            written=written,
+            extra_meta=extra_meta,
+            keep_generations=keep_generations,
+        )
+        return {
+            "version": new, "vector_rows": n,
+            **({"appended_files": moved} if appended is not None else {}),
+        }
 
 
 def mor_delete(
@@ -633,13 +655,7 @@ def partitions_with_deletes(spark: SparkSession, path: str) -> list[str | None]:
     ∝ data bearing deletes, the analogue of cow_table's
     changed_partitions metadata-only contract."""
     meta, gen_dir = _resolve_gen(path, None)
-    vectors = _read_vectors(spark, gen_dir)
-    if vectors is None:
-        return []
-    return sorted(
-        (r[0] for r in vectors.select("part").distinct().collect()),
-        key=lambda v: (v is None, v),
-    )
+    return CT._vector_footprint(_delete_dirs(gen_dir))[1]
 
 
 def mor_compact(
@@ -735,7 +751,6 @@ def mor_table_changes(
         if not os.path.isdir(CT._gen_dir(path, v)):
             raise ValueError(f"version {v} of {path} is not retained on disk")
     changed = set(CT.changed_partitions(path, from_version, to_version))
-    delta_parts: set[str | None] = set()
     to_dir = CT._gen_dir(path, to_version)
     # deltas that changed VISIBILITY between the versions = present in
     # exactly ONE of the two generations. Under forward history that is
@@ -749,14 +764,9 @@ def mor_table_changes(
         for d in _delete_dirs(CT._gen_dir(path, from_version))
     }
     to_dirs = {os.path.basename(d): d for d in _delete_dirs(to_dir)}
-    for name in set(from_dirs) ^ set(to_dirs):
-        d = to_dirs.get(name) or from_dirs[name]
-        if glob.glob(os.path.join(d, "*.parquet")):
-            delta_parts.update(
-                r[0]
-                for r in spark.read.schema(VECTOR_SCHEMA).parquet(d)
-                .select("part").distinct().collect()
-            )
+    _, delta_parts = CT._vector_footprint(
+        to_dirs.get(name) or from_dirs[name] for name in set(from_dirs) ^ set(to_dirs)
+    )
     old_all = read_mor(spark, path, version=from_version)
     new_all = read_mor(spark, path, version=to_version)
     if not changed and not delta_parts:
@@ -823,11 +833,10 @@ def mor_stats(spark: SparkSession, path: str) -> dict:
     for d in _delete_dirs(gen_dir):
         for f in glob.glob(os.path.join(d, "*.parquet")):
             vec_bytes += os.path.getsize(f)
-    vectors = _read_vectors(spark, gen_dir)
     return {
         "version": meta["version"],
         "data_files": files,
         "data_bytes": data_bytes,
         "vector_bytes": vec_bytes,
-        "vector_rows": 0 if vectors is None else vectors.count(),
+        "vector_rows": CT._vector_footprint(_delete_dirs(gen_dir))[0],
     }

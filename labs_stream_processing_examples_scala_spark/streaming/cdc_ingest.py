@@ -85,13 +85,7 @@ class CdcMergeSink:
         last = self.last_batch_id()
         if last is not None and batch_id <= last:
             return  # this batch's generation already committed (replay)
-        # the merge reads the batch through several frames: persist it so
-        # the source is scanned once, not once per frame
-        batch = batch.persist()
-        try:
-            self._apply(batch, batch_id)
-        finally:
-            batch.unpersist()
+        self._apply(batch, batch_id)
 
     def _updates(self, batch: DataFrame) -> DataFrame:
         return batch.filter(F.col(self.op_col) == "u").select(
@@ -135,10 +129,10 @@ class MorCdcSink(CdcMergeSink):
     touched-partition bytes per trigger. Measured by
     ``perfbench/run.py --workload cdc_merge --trace 1`` (seed 7; 20,000
     keys in 8 partitions, 1,000 changes a batch, local[4]): MOR merges
-    a batch in 1,583 ms (p50) with 13 Spark jobs, COW
-    (``--cdc-tier cow``) in 1,515 ms with 17 jobs. Random keys touch
-    every partition at that size, so COW rewrites the whole table per
-    batch and still keeps pace; tools/tier_bench.py measures where the
+    a batch in 1,858 ms (p50; median of 5 traced runs) with 11 Spark
+    jobs, COW (``--cdc-tier cow``) in 2,138 ms (one run) with 14 jobs.
+    Random keys touch every partition at that size, so COW rewrites the
+    whole table per batch and still keeps pace; tools/tier_bench.py measures where the
     tiers cross as the table grows. The txn idiom is identical: the
     last-applied batch id rides the same manifest flip as the
     vector/append commit, so replay-skip and the crash matrix carry
@@ -150,22 +144,30 @@ class MorCdcSink(CdcMergeSink):
             mor_table as MT,
         )
 
-        # mor_upsert folds the batch to one change per key itself (an
-        # update keeps its max value), so the updates go in unaggregated
-        MT.mor_upsert(
-            batch.sparkSession,
-            self.target_path,
-            self._updates(batch),
-            self.key,
-            "u_key",
-            self.versioned_col,
-            "new_val",
-            self.partition_col,
-            change_date=self.change_date_fn(batch_id),
-            delete_keys=self._deletes(batch),
-            delete_key="d_key",
-            extra_meta={LAST_BATCH_KEY: batch_id},
-        )
+        # the change frame reads the batch through two arms: persist it
+        # so the source is scanned once, not once per arm. (The COW merge
+        # does not: at 1,000-row batches each AQE cache stage of a
+        # persisted batch costs more than re-scanning the file.)
+        batch = batch.persist()
+        try:
+            # mor_upsert folds the batch to one change per key itself (an
+            # update keeps its max value), so the updates go in unaggregated
+            MT.mor_upsert(
+                batch.sparkSession,
+                self.target_path,
+                self._updates(batch),
+                self.key,
+                "u_key",
+                self.versioned_col,
+                "new_val",
+                self.partition_col,
+                change_date=self.change_date_fn(batch_id),
+                delete_keys=self._deletes(batch),
+                delete_key="d_key",
+                extra_meta={LAST_BATCH_KEY: batch_id},
+            )
+        finally:
+            batch.unpersist()
 
     def view(self, spark: SparkSession) -> DataFrame:
         from labs_stream_processing_examples_scala_spark.operators import (

@@ -712,34 +712,192 @@ def test_cdc_ingest_scans_each_change_file_once(spark, tmp_path):
     assert seen == {i: len(rows) for i, rows in enumerate(batches)}
 
 
+def _jobs_in_group(spark, group: str, fn) -> int:
+    """Jobs ``fn`` runs in job group ``group``; asserts it runs none
+    outside it (a thread that lost the caller's job group would make a
+    budget pass by under-counting)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped, "a job ran outside the group"
+    return len(tracker.getJobIdsForGroup(group))
+
+
+_CDC_SCHEMA = "k long, new_value double, op string"
+
+
 #: jobs one MorCdcSink.process_batch runs at fixture size (measured):
-#: parquet schema inference of the base, the batch cache (one stage per
-#: change arm), the vector broadcast, the change-frame shuffle, the
-#: current-row broadcast, the joined frame's and the vector delta's
-#: cache, the footprint aggregate (shuffle + result), the vector write
-#: and the appended rows' shuffle and write
-MOR_CDC_JOB_BUDGET = 13
+#: parquet schema inference of the base; the batch cache (one stage per
+#: change arm); the vector broadcast; the change-frame shuffle; the
+#: current-row broadcast; the joined frame's cache stage, once per
+#: write (the two writes start together, so each plans the not yet
+#: loaded cache as its own stage); the vector write; the appended rows'
+#: shuffle and write
+MOR_CDC_JOB_BUDGET = 11
 
 
 def test_mor_cdc_batch_job_budget(spark, tmp_path):
     """The one-pass merge's job count, bounded so a re-introduced
-    re-scan or read-back shows up as a failure."""
+    re-scan, read-back or footprint job shows up as a failure."""
     from labs_stream_processing_examples_scala_spark.streaming.cdc_ingest import MorCdcSink
 
     path = str(tmp_path / "t")
     _init(spark, path)
     MT.mor_delete(spark, path, F.col("k") == 0, "p")  # the base carries vectors
     sink = MorCdcSink(path, "k", "val", "p")
-    batch = spark.createDataFrame(
-        [(1, 10.0, "u"), (2, None, "d"), (100, 1.0, "u")], "k long, new_value double, op string"
+    batch = spark.createDataFrame([(1, 10.0, "u"), (2, None, "d"), (100, 1.0, "u")], _CDC_SCHEMA)
+    jobs = _jobs_in_group(
+        spark, f"mor-cdc-budget-{os.getpid()}", lambda: sink.process_batch(batch, 0)
     )
-    sc = spark.sparkContext
-    group = f"mor-cdc-budget-{os.getpid()}"
-    sc.setJobGroup(group, "one MorCdcSink batch")
-    try:
-        sink.process_batch(batch, 0)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < jobs <= MOR_CDC_JOB_BUDGET, jobs
+
+
+#: jobs one CdcMergeSink.process_batch runs at fixture size with a
+#: file-scanned batch (measured; 22 with the batch persisted, one AQE
+#: cache stage per read of it)
+COW_CDC_JOB_BUDGET = 19
+
+
+def test_cow_cdc_batch_job_budget(spark, tmp_path):
+    """The copy-on-write sink re-scans its (small) batch file instead of
+    persisting it: each read of a persisted batch is an AQE cache stage
+    with its own job."""
+    from labs_stream_processing_examples_scala_spark.streaming.cdc_ingest import CdcMergeSink
+
+    path = str(tmp_path / "t")
+    _init(spark, path)
+    sink = CdcMergeSink(path, "k", "val", "p")
+    # a file-scanned batch, as the stream source hands it to the sink
+    f = str(tmp_path / "batch.parquet")
+    spark.createDataFrame(
+        [(1, 10.0, "u"), (2, None, "d"), (100, 1.0, "u")], _CDC_SCHEMA
+    ).coalesce(1).write.parquet(f)
+    batch = spark.read.schema(_CDC_SCHEMA).parquet(f)
+    jobs = _jobs_in_group(
+        spark, f"cow-cdc-budget-{os.getpid()}", lambda: sink.process_batch(batch, 0)
+    )
+    assert 0 < jobs <= COW_CDC_JOB_BUDGET, jobs
+    got = {(r["k"], r["val"]) for r in CT.read_cow(spark, path).filter("is_current").collect()}
+    assert (1, 10.0) in got and (100, 1.0) in got and 2 not in {k for k, _ in got}
+
+
+def test_read_mor_footprint_is_read_without_a_job(spark, tmp_path):
+    """read_mor, partitions_with_deletes and mor_stats take the vectors'
+    partition footprint and row count from the delta files on the
+    driver. A vector row in the null partition still makes that
+    partition dirty: its deleted row stays hidden, the clean rows of
+    the null partition stay visible."""
+    path = str(tmp_path / "t")
+    _init(spark, path)
+    extra = spark.createDataFrame(
+        [(200, None, 9.0), (201, None, 8.0)], "k long, p string, val double"
+    )
+    CT.append_cow(spark, MG.scd2_init(extra), path, "p")
+    MT.mor_delete(spark, path, "k IN (1, 200)", "p")  # B and the null partition
+
+    assert MT.partitions_with_deletes(spark, path) == ["B", None]
+    assert MT.mor_stats(spark, path)["vector_rows"] == 2
+    # one job infers the base's schema; the footprint adds none
+    assert _jobs_in_group(spark, "read-mor-plan", lambda: MT.read_mor(spark, path)) <= 1
+    jobs = _jobs_in_group(
+        spark, "read-mor",
+        lambda: MT.read_mor(spark, path).write.format("noop").mode("overwrite").save(),
+    )
+    # schema inference, the vector broadcast and the scan
+    assert jobs <= 3, jobs
+    got = sorted(r["k"] for r in MT.read_mor(spark, path).collect())
+    assert got == sorted((set(range(24)) - {1}) | {201})
+
+
+def test_run_overlapped_keeps_job_group_and_raises_earlier_failure(spark):
+    """The side write's thread runs its jobs in the caller's job group,
+    and when both writes fail the earlier failure is raised, after both
+    have finished."""
+    import threading
+    import time
+
+    def fails(after: float, msg: str, done: list):
+        def f():
+            time.sleep(after)
+            done.append(msg)
+            raise ValueError(msg)
+        return f
+
+    jobs = _jobs_in_group(
+        spark, "overlap-group",
+        lambda: MT._run_overlapped(lambda: None, lambda: spark.range(3).collect()),
+    )
+    assert jobs >= 1
+    alive = {t for t in threading.enumerate() if t.is_alive()}
+    for slow, fast in (("main", "side"), ("side", "main")):
+        done: list = []
+        with pytest.raises(ValueError, match=fast):
+            MT._run_overlapped(
+                fails(0.4 if slow == "main" else 0.0, "main", done),
+                fails(0.4 if slow == "side" else 0.0, "side", done),
+            )
+        assert done == [fast, slow]
+    assert {t for t in threading.enumerate() if t.is_alive()} <= alive
+
+
+def test_mor_commit_appended_write_failure_commits_nothing(spark, tmp_path, monkeypatch):
+    """The appended-rows write runs on its own thread beside the vector
+    write. When it fails: the error surfaces after the vector write has
+    finished, its thread is done, the live version is unchanged,
+    recover() leaves no staged generation, no persisted frame outlives
+    the batch, and a re-run commits what an undisturbed run commits."""
+    import threading
+
+    from pyspark import InheritableThread
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from labs_stream_processing_examples_scala_spark.streaming.cdc_ingest import MorCdcSink
+
+    rows = [(1, 10.0, "u"), (2, None, "d"), (100, 1.0, "u"), (5, 50.0, "u")]
+    twin, path = str(tmp_path / "twin"), str(tmp_path / "t")
+    for p in (twin, path):
+        _init(spark, p)
+        MT.mor_delete(spark, p, F.col("k") == 0, "p")
+    MorCdcSink(twin, "k", "val", "p").process_batch(spark.createDataFrame(rows, _CDC_SCHEMA), 0)
+    live = CT.read_manifest(path)["version"]
+    start = _persisted(spark)
+
+    real = DataFrameWriter.parquet
+    failed_on: list = []
+
+    def failing_parquet(self, p, *a, **kw):
+        if "_append_stage_v" in p:
+            failed_on.append(threading.current_thread())
+            raise RuntimeError("injected appended-rows write failure")
+        return real(self, p, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    sink = MorCdcSink(path, "k", "val", "p")
+    with pytest.raises(RuntimeError, match="injected"):
+        sink.process_batch(spark.createDataFrame(rows, _CDC_SCHEMA), 0)
+    (thread,) = failed_on
+    assert isinstance(thread, InheritableThread) and not thread.is_alive()
+    staged = CT._gen_dir(path, live + 1)
+    assert os.path.exists(os.path.join(staged, MT.DELETES, f"d{live + 1}", "_SUCCESS")), (
+        "the failure surfaced before the vector write finished"
+    )
+    assert CT.read_manifest(path)["version"] == live and sink.last_batch_id() is None
+    assert _persisted(spark) == start
+    CT.recover(path)
+    assert not os.path.exists(staged)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", real)
+    sink.process_batch(spark.createDataFrame(rows, _CDC_SCHEMA), 0)
+    assert sink.last_batch_id() == 0
+    committed = [
+        CT._read_commit_log(CT._gen_dir(p, CT.read_manifest(p)["version"]))["vector_rows"]
+        for p in (path, twin)
+    ]
+    assert committed[0] == committed[1] == 3  # k=1, 2 and 5; k=100 is an insert
+    assert _rows(spark, path) == _rows(spark, twin)
